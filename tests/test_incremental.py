@@ -76,7 +76,7 @@ def _canon(report) -> list[tuple]:
     )
 
 
-def _check_equiv(spark, base_rows, new_rows, changed_rows):
+def _check_equiv(spark, base_rows, new_rows, changed_rows, spark_hops=False):
     base = triples_from_rows(spark, base_rows)
     new = triples_from_rows(spark, new_rows)
     changed = triples_from_rows(spark, changed_rows)
@@ -96,6 +96,16 @@ def _check_equiv(spark, base_rows, new_rows, changed_rows):
     )
     assert _canon(inc_d) == full, f"distributed-path mismatch ({stats_d.get('mode')})"
     assert stats_d.get("mode") != "incremental_local"
+    if spark_hops:
+        # edge_collect_max=0: the footprint edges never fit the driver
+        # cache, so the expansion runs as one Spark job per hop
+        stats_h: dict = {}
+        inc_h = incremental_revalidate(
+            spark, new, changed, SHAPES, prev, edge_collect_max=0, stats=stats_h
+        )
+        assert _canon(inc_h) == full, f"spark-hop mismatch ({stats_h.get('mode')})"
+        if stats_h["mode"].startswith("incremental"):
+            assert stats_h["edge_mode"] == "spark_hops"
 
 
 def test_footprint_analysis():
@@ -142,7 +152,7 @@ def test_scenario_equivalence(spark, name):
     removed, added = SCENARIOS[name]
     base = _base_rows()
     new = [r for r in base if r not in removed] + added
-    _check_equiv(spark, base, new, removed + added)
+    _check_equiv(spark, base, new, removed + added, spark_hops=True)
 
 
 def test_random_delta_equivalence(spark):
