@@ -1,1 +1,1 @@
-from shacl_spark.kg.extract import extract_triples, provenance_triples, mention_triples  # noqa: F401
+from shacl_spark.kg.extract import extract_triples  # noqa: F401

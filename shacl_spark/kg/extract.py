@@ -192,76 +192,6 @@ def _finish(df: DataFrame, triples_array: Column) -> DataFrame:
     ).select("t.*", "src_repo", "src_path", "src_commit", "part_id")
 
 
-def provenance_triples(corpus: DataFrame, n_parts: int = 1024) -> DataFrame:
-    """A6: repo/commit/sha256/type provenance — pure column ops, codegen'd.
-
-    One projection emits all five triples per file as an array, then one
-    explode — a single narrow pass over the scan.
-    """
-    base = corpus.withColumn("file", file_iri()).withColumn("part_id", _part_id(n_parts))
-    f = F.col("file")
-    arr = F.array(
-        _t(f, RDF_TYPE, F.lit(KG + "File")),
-        _t(f, KG + "inRepo", repo_iri("repo")),
-        _t(f, KG + "atCommit", F.col("commit"), "literal", XSD_STRING),
-        _t(f, KG + "sha256", F.sha2(F.col("content"), 256), "literal", XSD_STRING),
-        _t(f, KG + "lang", F.col("lang"), "literal", XSD_STRING),
-    )
-    return _finish(base, arr)
-
-
-def mention_triples(corpus: DataFrame, n_parts: int = 1024) -> DataFrame:
-    """A2–A5: one pandas-UDF stage → one explode → one per-kind projection.
-
-    The per-mention triple fan-out is a CASE expression producing an
-    array<struct>, so the Arrow UDF executes exactly once per file and
-    the whole stage stays narrow (no shuffle, no plan-branch recompute).
-    """
-    m = (
-        corpus.withColumn("file", file_iri())
-        .withColumn("part_id", _part_id(n_parts))
-        .select("repo", "path", "commit", "part_id", "file",
-                F.explode(_mentions_udf("content", "lang")).alias("mention"))
-        .select("repo", "path", "commit", "part_id", "file",
-                F.col("mention.kind").alias("kind"),
-                F.col("mention.name").alias("name"),
-                F.col("mention.extra").alias("extra"))
-    )
-    f = F.col("file")
-    sym = F.concat(f, F.lit("#"), F.col("name"))
-    mention_ref = F.concat(F.lit(KG + "mention/"), F.col("extra"))
-
-    fanout = (
-        F.when(F.col("kind") == "import",
-               F.array(_t(f, KG + "imports", module_iri("name"))))
-        .when(F.col("kind") == "class",
-              F.when(
-                  F.col("extra").isNotNull() & ~F.col("extra").isin("object", ""),
-                  F.array(
-                      _t(sym, RDF_TYPE, F.lit(KG + "Class")),
-                      _t(f, KG + "defines", sym),
-                      _t(sym, KG + "name", F.col("name"), "literal", XSD_STRING),
-                      _t(sym, KG + "extends", mention_ref),
-                  ),
-              ).otherwise(
-                  F.array(
-                      _t(sym, RDF_TYPE, F.lit(KG + "Class")),
-                      _t(f, KG + "defines", sym),
-                      _t(sym, KG + "name", F.col("name"), "literal", XSD_STRING),
-                  )
-              ))
-        .when(F.col("kind") == "func",
-              F.array(
-                  _t(sym, RDF_TYPE, F.lit(KG + "Function")),
-                  _t(f, KG + "defines", sym),
-                  _t(sym, KG + "name", F.col("name"), "literal", XSD_STRING),
-              ))
-        .otherwise(  # call
-            F.array(_t(f, KG + "calls", F.concat(F.lit(KG + "mention/"), F.col("name")))))
-    )
-    return _finish(m, fanout)
-
-
 def _mention_fanout(f: Column, m: Column) -> Column:
     """Triples for one mention struct ``m`` (fields kind/name/extra) —
     used inside a transform over the mention array, so the whole

@@ -1,8 +1,5 @@
-"""Incremental revalidation (r03): validate only the focus nodes a
-triple delta can affect, merge with the previous report.
-
-At 100 TB nobody revalidates the whole graph because one feed changed;
-the sound contract is:
+"""Incremental revalidation: validate only the focus nodes a triple
+delta can affect, merge with the previous report.
 
     new_report = incremental_revalidate(spark, triples_new, changed,
                                         shapes, prev_report)
@@ -20,39 +17,42 @@ graph:
   ``*``/``+`` paths expand to fixpoint rather than depth-bounded.
   ``sh:closed`` needs no hop edges (it reads only the focus node's own
   triples, and subjects of changed triples are always seeded).
+- **footprint edges** — ONE Spark projection, :func:`footprint_edges`,
+  turns every footprint triple into its edges: ``dep``/``rdep``
+  (dependency: a change at ``a`` affects ``b``) and ``cdep``/``crdep``
+  (validation context: validating ``a`` reads ``b``), the ``r`` families
+  over the recursive predicates.  Its three readers: the driver edge
+  cache (:class:`_LocalEdges`, one bounded Arrow collect), that cache's
+  per-batch upkeep (the same projection over a micro-batch journal) and,
+  above the collect cap, one broadcast-join Spark job per hop.
 - **seeds** — subjects of every changed triple (their value sets
   changed), objects of inversely-used predicates, and all objects with
   full term identity as potential (new/removed) focus nodes — without
   propagation, since their own value sets did not change.  Target
   membership is decided by triples touching the node itself, so
   seeding covers target changes with zero extra hops.
-- **expansion** — D hops along DEPENDENCY edges: backward
-  (object→subject) for forward path steps, forward for inverse steps —
-  a value's change must reach the focus pointing AT it, but a hub
-  object must NOT fan the set back out to all its in-neighbors — plus
-  fixpoint expansion along recursive-path predicates.
+- **expansion** — D hops along the ``dep`` edges alternated with a
+  fixpoint along ``rdep``; then the same walk over ``cdep``/``crdep``
+  bounds the slice of the graph the restricted validation reads.
 - **escape hatch** — a delta touching ``rdfs:subClassOf`` invalidates
   class closures globally: fall back to full revalidation (correct and
   rare; ontology edits are not row-rate events).
 
 The restricted validation itself reuses the engine end-to-end
-(``Validator(only_nodes=...)``); unaffected report rows carry over from
-``prev_report`` by focus-term anti-join.
+(``Validator(only_nodes=...)``, or the driver interpreter for a small
+slice); unaffected report rows carry over from ``prev_report`` by
+focus-term anti-join.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from shacl_spark.functions.terms import (
-    RDF_TYPE,
-    RDFS_SUBCLASSOF,
-    node_key_col,
-    subject_kind_col,
-)
+from shacl_spark.functions.terms import RDFS_SUBCLASSOF, node_key_col
 from shacl_spark.shacl.engine import Validator, validate
 from shacl_spark.shacl.parser import parse_shapes_graph
 from shacl_spark.shacl.shapes import (
@@ -214,153 +214,79 @@ def shapes_footprint(shapes: ShapesGraph) -> Footprint:
     return fp
 
 
-def _dep_edges(triples: DataFrame, fwd: set[str], inv: set[str]) -> DataFrame:
-    """Dependency-propagation edges DF[a, b] (a change at ``a`` affects
-    ``b``): backward (object→subject) for forward-use predicates,
-    forward (subject→object) for inverse-use ones.
+# --- the footprint edges -------------------------------------------------
 
-    ONE scan emits both directions (r05): a predicate used both ways (a
-    sparql BGP pred) explodes into two edges; the old two-branch union
-    scanned the triple frame twice PER HOP.  Deliberately not deduped or
-    materialized — the frame stays a lazy filter over the triple scan;
-    duplicate edges only duplicate frontier candidates, and the frontier
-    is distinct()ed anyway (deduping costs an O(|graph|) shuffle per
-    call — measured, it made incremental SLOWER at the 10x corpus)."""
-    both = sorted(fwd | inv)
-    res = triples.where(F.col("obj_kind").isin("iri", "bnode"))
-    if not both:
-        return res.select(F.col("subj").alias("a"), F.col("obj").alias("b")).limit(0)
-    res = res.where(F.col("pred").isin(both))
-    arms = [
-        F.when(
-            F.col("pred").isin(*sorted(fwd)) if fwd else F.lit(False),
-            F.struct(F.col("obj").alias("a"), F.col("subj").alias("b")),
-        ),
-        F.when(
-            F.col("pred").isin(*sorted(inv)) if inv else F.lit(False),
-            F.struct(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        ),
-    ]
+_FAMS = ("dep", "rdep", "cdep", "crdep")
+
+
+def footprint_edges(
+    triples: DataFrame, fp: Footprint, *carry: Column
+) -> DataFrame | None:
+    """THE edge rule: DF[*carry, edges] with one row per footprint
+    triple (a triple that gives at least one edge), ``edges`` an
+    ``array<struct<fam, a, b>>``; None when the footprint has no
+    predicate.
+
+    A FORWARD-used predicate (``focus -p-> value``) gives the dependency
+    edge object→subject (the value's change reaches the focus pointing
+    AT it — never the other way, else a hub object fans the affected set
+    out to all its in-neighbors) and the context edge subject→object; an
+    inversely-used one gives the reverse pair.  ``dep``/``cdep`` come
+    from the depth-bounded predicates, ``rdep``/``crdep`` from the
+    recursive (``*``/``+``) ones.  Only resource objects (iri/bnode) are
+    hop nodes, except that inverse context edges keep literal objects: a
+    literal focus (targetObjectsOf can select literals) reaches its
+    inverse-path values through them.
+
+    One scan, no shuffle: the coarse predicate filter is pushed to the
+    scan, and the exact footprint test is the non-empty edge array."""
+    s, o = F.col("subj"), F.col("obj")
+    resource = F.col("obj_kind").isin("iri", "bnode")
+    arms = []
+    for dfam, cfam, fwd, inv in (
+        ("dep", "cdep", fp.fwd_preds, fp.inv_preds),
+        ("rdep", "crdep", fp.rec_fwd, fp.rec_inv),
+    ):
+        for fam, preds, cond, a, b in (
+            (dfam, fwd, resource, o, s),
+            (cfam, fwd, resource, s, o),
+            (dfam, inv, resource, s, o),
+            (cfam, inv, F.lit(True), o, s),
+        ):
+            if preds:
+                arms.append(F.when(
+                    F.col("pred").isin(*sorted(preds)) & cond,
+                    F.struct(F.lit(fam).alias("fam"), a.alias("a"), b.alias("b")),
+                ))
+    if not arms:
+        return None
+    all_rel = fp.fwd_preds | fp.inv_preds | fp.rec_fwd | fp.rec_inv
+    edges = F.filter(F.array(*arms), lambda e: e.isNotNull())
     return (
-        res.select(F.explode(F.array(*arms)).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
+        triples.where(F.col("pred").isin(*sorted(all_rel)))
+        .select(*carry, edges.alias("edges"))
+        .where(F.size("edges") > 0)
     )
 
 
-def affected_node_keys(
-    spark: SparkSession, triples: DataFrame, changed: DataFrame, fp: Footprint
-) -> DataFrame:
-    """DF[node] of term keys whose validation results the delta can
-    influence (conservative superset, direction-aware)."""
-    # value-set-changed nodes: every changed triple changes its
-    # SUBJECT's outgoing values; it changes its OBJECT's inverse-values
-    # only when the predicate is used inversely by some shape
-    subj_seeds = changed.select(F.col("subj").alias("id"))
-    inv_obj_seeds = changed.where(
-        F.col("obj_kind").isin("iri", "bnode")
-        & (
-            F.col("pred").isin(*sorted(fp.inv_preds | fp.rec_inv))
-            if (fp.inv_preds | fp.rec_inv)
-            else F.lit(False)
-        )
-    ).select(F.col("obj").alias("id"))
-    ids = subj_seeds.unionByName(inv_obj_seeds).distinct().localCheckpoint(eager=True)
-
-    # each hop: broadcast the (small) frontier against the lazy
-    # pred-filtered scan — one scan per hop, no edge materialization,
-    # no O(|graph|) shuffle; only the frontier/acc (O(affected)) are
-    # ever checkpointed
-    dep = _dep_edges(triples, fp.fwd_preds, fp.inv_preds)
-    has_rec = bool(fp.rec_fwd or fp.rec_inv)
-    rdep = _dep_edges(triples, fp.rec_fwd, fp.rec_inv) if has_rec else None
-
-    acc = ids
-
-    def _hop(edges: DataFrame, frontier: DataFrame) -> DataFrame:
-        return (
-            edges.join(F.broadcast(frontier), edges["a"] == frontier["id"])
-            .select(F.col("b").alias("id"))
-            .distinct()
-            .join(acc, "id", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-
-    def _union_all(frames: list[DataFrame]) -> DataFrame:
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
-
-    # ADVICE r03 (high): a non-recursive hop must be able to FOLLOW a
-    # fixpoint hop — for sh:path (ex:q [sh:zeroOrMorePath ex:p]) the
-    # backward walk is p-fixpoint THEN q, so a p-chain longer than the
-    # depth bound is only reached by the fixpoint and still needs the
-    # final q hop.  Alternate the depth-bounded loop and the recursive
-    # fixpoint until a full round adds nothing: nodes the fixpoint adds
-    # re-enter the depth loop (with the full depth budget — conservative)
-    # and nodes the depth loop adds re-enter the fixpoint.
-    depth_pending = ids  # nodes not yet depth-expanded
-    fix_pending = ids    # nodes not yet fixpoint-expanded (1st round: seeds;
-    #                      depth-loop additions are unioned in per round)
-    while True:
-        new_depth: list[DataFrame] = []
-        frontier = depth_pending
-        for _ in range(fp.depth):
-            frontier = _hop(dep, frontier)
-            if frontier.isEmpty():
-                break
-            acc = acc.unionByName(frontier).localCheckpoint(eager=True)
-            new_depth.append(frontier)
-        if not has_rec:
-            break
-        new_fix: list[DataFrame] = []
-        frontier = _union_all([fix_pending, *new_depth])
-        while True:
-            frontier = _hop(rdep, frontier)
-            if frontier.isEmpty():
-                break
-            acc = acc.unionByName(frontier).localCheckpoint(eager=True)
-            new_fix.append(frontier)
-        if not new_fix:
-            break  # nothing for the depth loop to extend — converged
-        depth_pending = _union_all(new_fix).localCheckpoint(eager=True)
-        fix_pending = acc.limit(0)
-
-    # every changed triple can also flip its OBJECT's target membership
-    # (targetObjectsOf) or make it a new focus — include objects with
-    # full term identity (literals can be focus nodes), but do NOT
-    # propagate from them: their own value sets did not change
-    obj_keys = changed.select(
-        node_key_col(
-            F.col("obj_kind"), F.col("obj"), F.col("obj_dt"), F.col("obj_lang")
-        ).alias("node")
-    )
-    resource_keys = acc.select(F.col("id").alias("node"))
-    return resource_keys.unionByName(obj_keys).distinct()
-
-
-# --- driver-coordinated expansion (r05) ----------------------------------
+# --- driver-coordinated expansion ----------------------------------------
 #
 # Affected sets at CDC rates are SMALL (hundreds-to-thousands of nodes
 # for row-rate deltas), so the frontier bookkeeping lives on the driver:
-# one Spark job per hop (broadcast-join the frontier against the lazy
-# pred-filtered scan, collect the new ids) instead of the three jobs per
-# hop (checkpoint + isEmpty + union-checkpoint) the distributed variant
-# pays — measured, the fixed per-job cost made incremental SLOWER than
-# full validation at the 1x bench corpus (VERDICT r04 "What's wrong" #1).
-# ``cap`` bounds every collect; blowing past it triggers the cost-based
-# full-validation escape.  This mirrors kg/cc.py's bounded driver-side
-# union-find: the pattern is a deliberate scale valve, not a shortcut —
-# a delta whose influence region exceeds the cap is precisely the delta
-# for which restricted validation stops being cheaper than full.
+# the hops either look the frontier up in the driver edge cache or, above
+# its cap, run one Spark job each (broadcast-join the frontier against
+# the lazy footprint projection, collect the new ids).  ``cap`` bounds
+# every expansion; blowing past it triggers the cost-based
+# full-validation escape — a delta whose influence region exceeds the
+# cap is precisely the delta for which restricted validation stops being
+# cheaper than full (the same bounded driver assist as kg/cc.py's
+# union-find).
 
 
 def _hop_collect(
     spark: SparkSession, edges: DataFrame, frontier: set[str]
-) -> set[str] | None:
-    """One dependency hop: ids reachable from ``frontier`` (None when
-    the frontier itself is too large to broadcast sanely)."""
+) -> set[str]:
+    """One hop over ``edges`` DF[a, b]: ids reachable from ``frontier``."""
     if not frontier:
         return set()
     fdf = spark.createDataFrame([(x,) for x in sorted(frontier)], "id string")
@@ -374,31 +300,46 @@ def _hop_collect(
     return {r[0] for r in rows}
 
 
-def _expand_generic(
-    seeds: set[str],
-    hop_dep,
-    hop_rdep,
-    depth: int,
-    cap: int,
-) -> set[str] | None:
-    """Depth-bounded + fixpoint-alternated expansion (same alternation
-    contract as :func:`affected_node_keys` — a non-recursive hop can
-    follow a fixpoint hop and vice versa), with the frontier/acc sets on
-    the driver.  ``hop_dep``/``hop_rdep`` are frontier→neighbors
-    callables (None when that edge family is absent) — either one
-    broadcast-join Spark job per hop or a pure-driver adjacency lookup
-    (see :class:`_LocalEdges`).  Returns None when ``cap`` is exceeded
-    (escape)."""
+def _spark_hops(spark: SparkSession, triples: DataFrame, fp: Footprint):
+    """Over-cap ``hop_of``: ``hop_of(fam)`` maps a frontier to its
+    neighbours with one broadcast-join Spark job over that family of the
+    (lazy, never materialized) footprint projection."""
+
+    def hop_of(fam: str):
+        edges = (
+            footprint_edges(triples, fp)
+            .select(F.explode("edges").alias("e"))
+            .where(F.col("e.fam") == fam)
+            .select("e.a", "e.b")
+        )
+        return lambda frontier: _hop_collect(spark, edges, frontier)
+
+    return hop_of
+
+
+def _expand(
+    hop_of, fp: Footprint, dfam: str, rfam: str, seeds: set, cap: int
+) -> set | None:
+    """Depth-bounded hops along ``dfam`` alternated with a fixpoint along
+    ``rfam`` until a full round adds nothing; ``hop_of(fam)`` gives a
+    frontier→neighbours callable.  A non-recursive hop must be able to
+    FOLLOW a fixpoint hop and vice versa: for sh:path (ex:q
+    [sh:zeroOrMorePath ex:p]) the backward walk is p-fixpoint THEN q, so
+    nodes the fixpoint adds re-enter the depth loop (with the full depth
+    budget — conservative) and nodes the depth loop adds re-enter the
+    fixpoint.  Returns the reached set (seeds included), None when it
+    exceeds ``cap`` (escape)."""
+    hop_dep = hop_of(dfam) if fp.fwd_preds or fp.inv_preds else None
+    hop_rdep = hop_of(rfam) if fp.rec_fwd or fp.rec_inv else None
     acc = set(seeds)
     depth_pending = set(seeds)
     fix_pending = set(seeds)
     while True:
-        new_depth: set[str] = set()
+        new_depth: set = set()
         frontier = depth_pending
         if hop_dep is not None:
-            for _ in range(depth):
-                nxt = hop_dep(frontier)
-                nxt -= acc
+            for _ in range(fp.depth):
+                nxt = hop_dep(frontier) - acc
                 if not nxt:
                     break
                 acc |= nxt
@@ -408,11 +349,10 @@ def _expand_generic(
                 frontier = nxt
         if hop_rdep is None:
             break
-        new_fix: set[str] = set()
+        new_fix: set = set()
         frontier = fix_pending | new_depth
         while True:
-            nxt = hop_rdep(frontier)
-            nxt -= acc
+            nxt = hop_rdep(frontier) - acc
             if not nxt:
                 break
             acc |= nxt
@@ -427,222 +367,136 @@ def _expand_generic(
     return acc
 
 
-def _expand_local(
-    spark: SparkSession,
-    seeds: set[str],
-    dep: DataFrame | None,
-    rdep: DataFrame | None,
-    depth: int,
-    cap: int,
-) -> set[str] | None:
-    """Spark-hop expansion: one broadcast-join job per hop."""
-    hop_d = (lambda f: _hop_collect(spark, dep, f)) if dep is not None else None
-    hop_r = (lambda f: _hop_collect(spark, rdep, f)) if rdep is not None else None
-    return _expand_generic(seeds, hop_d, hop_r, depth, cap)
+def _multiset_minus(keys, drop):
+    """(keep mask over ``keys`` removing one occurrence per element of
+    ``drop``, whether every element of ``drop`` found one) — vectorized:
+    an occurrence survives when its rank among equal keys is at least
+    the number of drops of that key."""
+    import numpy as np
+
+    order = np.argsort(keys, kind="stable")
+    sk = keys[order]
+    rank = np.arange(len(sk)) - np.searchsorted(sk, sk)
+    sd = np.sort(drop)
+    need = np.searchsorted(sd, sk, "right") - np.searchsorted(sd, sk)
+    keep = np.empty(len(keys), dtype=bool)
+    keep[order] = rank >= need
+    return keep, len(keys) - int(keep.sum()) == len(drop)
 
 
 class _LocalEdges:
-    """Driver-side footprint-predicate edge set (r05): ONE scan + ONE
-    bounded collect replaces the per-hop broadcast-join jobs — at CDC
-    delta rates the expansion cost was ~10 scheduled jobs per
-    revalidation, all walking the same edges.  The same collected rows
-    serve BOTH expansion directions (dependency a←b and validation-
-    context a→b), so dep + ctx expansion together cost two Spark jobs
-    total (count + collect).  Falls back to the Spark hops
-    (``collect_local_edges`` returns None) above ``cap`` edge rows —
-    the 100 TB posture: driver assists are bounded, never assumed (same
-    pattern as kg/cc.py's union-find).
+    """Driver-side copy of the footprint edges: ONE bounded Arrow collect
+    of the projection replaces the per-hop broadcast-join jobs for both
+    expansion directions.  Callers fall back to the Spark hops
+    (``collect_local_edges`` returns None) above ``cap`` footprint
+    triples — driver assists are bounded, never assumed.
 
-    Representation (r06): edges live as numpy int code arrays over a
-    pyarrow string vocabulary instead of str→list adjacency dicts —
-    building the dicts materialized ~600k Python strings and dict
-    appends per 150k edges (~0.7 s per revalidation); the columnar
-    build is a handful of vectorized kernels (unique / index_in /
-    boolean masks), hop expansion is ``np.isin`` over the code arrays,
-    and only the (small) expansion RESULT is decoded back to strings.
-    Expansion results are sets, so the dict→array change is
-    observationally identical; ``dep``/``rdep``/``cdep``/``crdep``
-    remain available as materialized dict views for tests."""
+    Edges live as numpy int64 code arrays per family over a pyarrow
+    string vocabulary: hop expansion is ``np.isin`` over the codes and
+    only the (small) expansion RESULT is decoded back to strings.
+    ``n_rows`` counts the footprint triples behind the edges."""
 
-    _FAMS = ("dep", "rdep", "cdep", "crdep")
-
-    def __init__(self, fp: Footprint | None = None):
+    def __init__(self, tbl):
         import numpy as np
         import pyarrow as pa
 
         empty = np.empty(0, dtype=np.int64)
-        self._fam: dict[str, list] = {k: [empty, empty] for k in self._FAMS}
+        self._fam = {k: (empty, empty) for k in _FAMS}
         self._vocab = pa.array([], type=pa.string())
         self.n_rows = 0
         self.dirty = False
+        self._add(tbl)
 
-    @classmethod
-    def from_arrow(cls, tbl, fp: Footprint) -> "_LocalEdges":
-        """Vectorized build from the Arrow edge-collect table."""
+    def _codes(self, tbl, extend: bool) -> dict:
+        """Per family (a, b) code arrays of the projection rows in
+        ``tbl``.  ``extend`` appends unseen strings to the vocabulary;
+        otherwise they code as -1."""
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        self = cls(fp)
-        subs = tbl.column("subj").combine_chunks().cast(pa.string())
-        preds = tbl.column("pred").combine_chunks()
-        objs = tbl.column("obj").combine_chunks().cast(pa.string())
-        kinds = tbl.column("obj_kind").combine_chunks()
-        vocab = pc.unique(pa.concat_arrays([subs, objs]))
-        s = pc.index_in(subs, value_set=vocab).to_numpy(zero_copy_only=False).astype(np.int64)
-        o = pc.index_in(objs, value_set=vocab).to_numpy(zero_copy_only=False).astype(np.int64)
-        pv = pc.unique(preds)
-        pi = pc.index_in(preds, value_set=pv).to_numpy(zero_copy_only=False).astype(np.int64)
-        pl = pv.to_pylist()
-
-        def flag(ps):
-            return np.array([p in ps for p in pl], dtype=bool)[pi] if pl else np.zeros(0, bool)
-
-        fw, rf = flag(fp.fwd_preds), flag(fp.rec_fwd)
-        iv, ri = flag(fp.inv_preds), flag(fp.rec_inv)
-        res = np.logical_or(
-            pc.equal(kinds, "iri").to_numpy(zero_copy_only=False),
-            pc.equal(kinds, "bnode").to_numpy(zero_copy_only=False),
-        )
-        m1, m2 = fw & res, rf & res
-        m3r, m4r = iv & res, ri & res
-        cat = np.concatenate
-        self._fam["dep"] = [cat([o[m1], s[m3r]]), cat([s[m1], o[m3r]])]
-        self._fam["rdep"] = [cat([o[m2], s[m4r]]), cat([s[m2], o[m4r]])]
-        self._fam["cdep"] = [cat([s[m1], o[iv]]), cat([o[m1], s[iv]])]
-        self._fam["crdep"] = [cat([s[m2], o[ri]]), cat([o[m2], s[ri]])]
-        self._vocab = vocab
-        self.n_rows = int((m1 | m2 | iv | ri).sum())
-        return self
-
-    # --- test/debug views (same shape the old dict adjacency had) ------------
-
-    def _as_dict(self, key: str) -> dict:
-        from collections import defaultdict
-
-        vocab = self._vocab.to_pylist()
-        a, b = self._fam[key]
-        out: dict = defaultdict(list)
-        for ai, bi in zip(a.tolist(), b.tolist()):
-            out[vocab[ai]].append(vocab[bi])
+        e = tbl.column("edges").combine_chunks().flatten()
+        ab = pa.concat_arrays([e.field("a"), e.field("b")]).cast(pa.string())
+        codes = pc.index_in(ab, value_set=self._vocab)
+        if extend and codes.null_count:
+            unseen = pc.unique(ab.filter(pc.is_null(codes)))
+            self._vocab = pa.concat_arrays([self._vocab, unseen])
+            codes = pc.index_in(ab, value_set=self._vocab)
+        c = codes.fill_null(-1).to_numpy(zero_copy_only=False).astype(np.int64)
+        a, b = c[: len(e)], c[len(e):]
+        out = {}
+        for fam in _FAMS:
+            m = pc.equal(e.field("fam"), fam).to_numpy(zero_copy_only=False)
+            out[fam] = (a[m], b[m])
         return out
 
-    @property
-    def dep(self):
-        return self._as_dict("dep")
-
-    @property
-    def rdep(self):
-        return self._as_dict("rdep")
-
-    @property
-    def cdep(self):
-        return self._as_dict("cdep")
-
-    @property
-    def crdep(self):
-        return self._as_dict("crdep")
-
-    # --- delta maintenance -----------------------------------------------------
-
-    def _codes_of(self, strings: list[str], extend: bool):
-        """codes for ``strings`` against the vocab; ``extend=True``
-        appends unseen strings to the vocab first (additions), else
-        unseen maps to None (retraction of an unknown node → drift)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arr = pa.array(strings, type=pa.string())
-        codes = pc.index_in(arr, value_set=self._vocab)
-        if extend and codes.null_count:
-            missing = pc.unique(arr.filter(pc.is_null(codes)))
-            self._vocab = pa.concat_arrays([self._vocab, missing])
-            codes = pc.index_in(arr, value_set=self._vocab)
-        return codes.to_pylist()
-
-    def _edge_updates(self, d: dict, fp: Footprint):
-        """(family, a, b) string updates for one triple row — the exact
-        edge semantics of the columnar build above."""
-        s, p, o = d["subj"], d["pred"], d["obj"]
-        resource = d["obj_kind"] in ("iri", "bnode")
-        ups: list[tuple[str, str, str]] = []
-        hit = False
-        if p in fp.fwd_preds and resource:
-            ups += [("dep", o, s), ("cdep", s, o)]
-            hit = True
-        if p in fp.rec_fwd and resource:
-            ups += [("rdep", o, s), ("crdep", s, o)]
-            hit = True
-        if p in fp.inv_preds:
-            if resource:
-                ups.append(("dep", s, o))
-            ups.append(("cdep", o, s))
-            hit = True
-        if p in fp.rec_inv:
-            if resource:
-                ups.append(("rdep", s, o))
-            ups.append(("crdep", o, s))
-            hit = True
-        return ups, hit
-
-    def apply_delta(self, rows, fp: Footprint) -> "_LocalEdges":
-        """Maintain the edge set across a NET graph delta (r05
-        streaming steady state): ``rows`` carry the six triple columns
-        and optionally an ``op`` column ('-' retracts, anything else
-        adds).  Rows must be the exact live-set delta (both sinks'
-        ``_compute_delta`` guarantee this) or ``dirty`` trips and the
-        caller rebuilds."""
+    def _add(self, tbl) -> None:
         import numpy as np
 
-        adds: dict[str, list[tuple[str, str]]] = {k: [] for k in self._FAMS}
-        removes: dict[str, list[tuple[str, str]]] = {k: [] for k in self._FAMS}
-        for r in rows:
-            d = r.asDict() if hasattr(r, "asDict") else r
-            sign = -1 if d.get("op") == "-" else 1
-            ups, hit = self._edge_updates(d, fp)
-            for fam, a, b in ups:
-                (adds if sign > 0 else removes)[fam].append((a, b))
-            if hit:
-                self.n_rows += sign
-        add_strs = sorted({x for ps in adds.values() for p_ in ps for x in p_})
-        if add_strs:
-            self._codes_of(add_strs, extend=True)
-        for fam in self._FAMS:
-            a_arr, b_arr = self._fam[fam]
-            if adds[fam]:
-                pairs = adds[fam]
-                ac = self._codes_of([p_[0] for p_ in pairs], extend=True)
-                bc = self._codes_of([p_[1] for p_ in pairs], extend=True)
-                a_arr = np.concatenate([a_arr, np.array(ac, dtype=np.int64)])
-                b_arr = np.concatenate([b_arr, np.array(bc, dtype=np.int64)])
-            if removes[fam]:
-                pairs = removes[fam]
-                ac = self._codes_of([p_[0] for p_ in pairs], extend=False)
-                bc = self._codes_of([p_[1] for p_ in pairs], extend=False)
-                drop: list[int] = []
-                taken: set[int] = set()
-                for aci, bci in zip(ac, bc):
-                    if aci is None or bci is None:
-                        self.dirty = True
-                        continue
-                    idx = np.nonzero((a_arr == aci) & (b_arr == bci))[0]
-                    found = next((int(i) for i in idx if int(i) not in taken), None)
-                    if found is None:
-                        # retraction for an edge we never saw: the cache
-                        # drifted from the graph — flag for rebuild
-                        self.dirty = True
-                    else:
-                        taken.add(found)
-                        drop.append(found)
-                if drop:
-                    a_arr = np.delete(a_arr, drop)
-                    b_arr = np.delete(b_arr, drop)
-            self._fam[fam] = [a_arr, b_arr]
+        for fam, (a, b) in self._codes(tbl, extend=True).items():
+            old_a, old_b = self._fam[fam]
+            self._fam[fam] = (np.concatenate([old_a, a]), np.concatenate([old_b, b]))
+        self.n_rows += tbl.num_rows
+
+    def _remove(self, tbl) -> None:
+        """Retract one edge occurrence per projected edge; a retraction
+        the cache never saw means it drifted from the graph — ``dirty``
+        trips and the caller rebuilds."""
+        self.n_rows -= tbl.num_rows
+        n = len(self._vocab)
+        for fam, (da, db) in self._codes(tbl, extend=False).items():
+            if not len(da):
+                continue
+            if (da < 0).any() or (db < 0).any():
+                self.dirty = True
+                return
+            a, b = self._fam[fam]
+            keep, found = _multiset_minus(a * n + b, da * n + db)
+            self.dirty |= not found
+            self._fam[fam] = (a[keep], b[keep])
+
+    def _compact(self) -> None:
+        """Re-code to the vocabulary entries some edge still references
+        once the dead ones outnumber them: retractions never shrink the
+        vocabulary otherwise, so node churn would grow it unbounded
+        while ``n_rows`` stays flat."""
+        import numpy as np
+        import pyarrow as pa
+
+        live = np.zeros(len(self._vocab), dtype=bool)
+        for a, b in self._fam.values():
+            live[a] = True
+            live[b] = True
+        n_live = int(live.sum())
+        if len(self._vocab) - n_live <= n_live:
+            return
+        new_code = np.cumsum(live) - 1
+        self._vocab = self._vocab.filter(pa.array(live))
+        self._fam = {k: (new_code[a], new_code[b]) for k, (a, b) in self._fam.items()}
+
+    def apply_delta(self, journal: DataFrame, fp: Footprint) -> "_LocalEdges":
+        """Roll the edges forward by a NET graph delta: ``journal`` has
+        the six triple columns and optionally ``op`` ('-' retracts; no
+        ``op`` adds).  Rows must be the exact live-set delta (both
+        sinks' ``_compute_delta`` guarantee this) or ``dirty`` trips and
+        the caller rebuilds."""
+        import pyarrow.compute as pc
+
+        retract = (
+            F.col("op").eqNullSafe("-") if "op" in journal.columns else F.lit(False)
+        )
+        tbl = footprint_edges(journal, fp, retract.alias("retract")).toArrow()
+        self._add(tbl.filter(pc.invert(tbl.column("retract"))))
+        self._remove(tbl.filter(tbl.column("retract")))
+        self._compact()
         return self
 
-    # --- expansion ---------------------------------------------------------------
+    def pairs(self, fam: str) -> list[tuple[str, str]]:
+        """Sorted (a, b) string pairs of one edge family."""
+        a, b = (self._vocab.take(x).to_pylist() for x in self._fam[fam])
+        return sorted(zip(a, b))
 
-    def _hop_np(self, fam: str):
+    def hop_of(self, fam: str):
         import numpy as np
 
         a, b = self._fam[fam]
@@ -655,91 +509,34 @@ class _LocalEdges:
 
         return hop
 
-    def _expand(self, dfam: str, rfam: str, fp: Footprint, seeds, cap):
+    def expand(self, fp: Footprint, dfam: str, rfam: str, seeds, cap: int):
+        """:func:`_expand` over the codes; seeds outside the vocabulary
+        have no edges and come back unexpanded."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         seeds = set(seeds)
-        codes = pc.index_in(
-            pa.array(list(seeds), type=pa.string()), value_set=self._vocab
-        )
-        seed_codes = {c for c in codes.to_pylist() if c is not None}
-        hop_d = self._hop_np(dfam) if (fp.fwd_preds or fp.inv_preds) else None
-        hop_r = self._hop_np(rfam) if (fp.rec_fwd or fp.rec_inv) else None
-        acc = _expand_generic(seed_codes, hop_d, hop_r, fp.depth, cap)
+        codes = pc.index_in(pa.array(list(seeds), type=pa.string()), value_set=self._vocab)
+        acc = _expand(self.hop_of, fp, dfam, rfam, set(codes.drop_null().to_pylist()), cap)
         if acc is None:
             return None
-        decoded = self._vocab.take(
-            pa.array(list(acc), type=pa.int64())
-        ).to_pylist()
-        return seeds | set(decoded)
-
-    def expand_dep(self, fp: Footprint, seeds, cap):
-        return self._expand("dep", "rdep", fp, seeds, cap)
-
-    def expand_ctx(self, fp: Footprint, seeds, cap):
-        return self._expand("cdep", "crdep", fp, seeds, cap)
+        return seeds | set(self._vocab.take(pa.array(list(acc), type=pa.int64())).to_pylist())
 
 
 def collect_local_edges(
     triples: DataFrame, fp: Footprint, cap: int
 ) -> _LocalEdges | None:
-    """Bounded collect of every footprint-predicate edge row; None when
-    the edge family is empty or exceeds ``cap`` (callers then use the
-    per-hop Spark jobs)."""
-    all_rel = fp.fwd_preds | fp.inv_preds | fp.rec_fwd | fp.rec_inv
-    if not all_rel:
-        return None
-    inv_like = fp.inv_preds | fp.rec_inv
-    keep = F.col("obj_kind").isin("iri", "bnode")
-    if inv_like:
-        # inverse-direction CONTEXT edges keep literal objects (a
-        # literal focus reaches its inverse-path values through them)
-        keep = keep | F.col("pred").isin(*sorted(inv_like))
-    ef = triples.where(F.col("pred").isin(*sorted(all_rel)) & keep).select(
-        "subj", "pred", "obj", "obj_kind"
-    )
+    """Bounded collect of the footprint edges; None when the footprint
+    has no predicate or more than ``cap`` footprint triples (callers
+    then use the per-hop Spark jobs)."""
+    ef = footprint_edges(triples, fp)
     # cheap full-parallel count gates the cap BEFORE any driver
     # materialization (a limit(cap+1) Arrow collect would ship cap rows
-    # to the driver just to discover overflow — measured 1.5 s wasted
-    # per 10x-corpus revalidation); under the cap, ONE Arrow collect
-    # lands the edges columnar (pickled-Row collect was ~3 s at 150k)
-    if ef.count() > cap:
+    # to the driver just to discover overflow); under the cap, ONE Arrow
+    # collect lands the edges columnar
+    if ef is None or ef.count() > cap:
         return None
-    return _LocalEdges.from_arrow(ef.toArrow(), fp)
-
-
-
-
-
-def _ctx_edges(triples: DataFrame, fwd: set[str], inv: set[str]) -> DataFrame | None:
-    """VALIDATION-CONTEXT edges DF[a, b] (validating ``a`` reads ``b``'s
-    triples): forward (subject→object) for forward path steps, backward
-    for inverse ones — the mirror image of :func:`_dep_edges`.  The
-    inverse part deliberately keeps literal-object rows: a literal focus
-    (targetObjectsOf can select literals) reaches its inverse-path
-    values through them.  Same single-scan explode as
-    :func:`_dep_edges` (one triple-frame pass per hop, not two)."""
-    both = sorted(fwd | inv)
-    if not both:
-        return None
-    res = triples.where(F.col("pred").isin(both))
-    arms = [
-        F.when(
-            (F.col("pred").isin(*sorted(fwd)) if fwd else F.lit(False))
-            & F.col("obj_kind").isin("iri", "bnode"),
-            F.struct(F.col("subj").alias("a"), F.col("obj").alias("b")),
-        ),
-        F.when(
-            F.col("pred").isin(*sorted(inv)) if inv else F.lit(False),
-            F.struct(F.col("obj").alias("a"), F.col("subj").alias("b")),
-        ),
-    ]
-    return (
-        res.select(F.explode(F.array(*arms)).alias("e"))
-        .where(F.col("e").isNotNull())
-        .select(F.col("e.a").alias("a"), F.col("e.b").alias("b"))
-    )
+    return _LocalEdges(ef.toArrow())
 
 
 def _restricted_filter(
@@ -879,13 +676,12 @@ def incremental_revalidate(
         if r["pred"] in inv_all and r["obj_kind"] in ("iri", "bnode")
     }
     seeds = subj_seeds | inv_obj_seeds
-    has_rec = bool(fp.rec_fwd or fp.rec_inv)
-    # ONE bounded collect of the footprint-pred edge rows replaces the
-    # per-hop broadcast-join jobs for BOTH expansion directions (r05);
-    # above the cap, fall back to per-hop Spark jobs (still capped).
-    # A caller that maintains the adjacency across calls (the streaming
-    # validator applies each batch's net delta) passes ``local_edges``
-    # and skips even that collect — it MUST correspond to ``triples``.
+    # ONE bounded collect of the footprint edges replaces the per-hop
+    # broadcast-join jobs for BOTH expansion directions; above the cap,
+    # fall back to per-hop Spark jobs (still capped).  A caller that
+    # maintains the edges across calls (the streaming validator applies
+    # each batch's net delta) passes ``local_edges`` and skips even that
+    # collect — it MUST correspond to ``triples``.
     if local_edges is not None and not local_edges.dirty:
         ledges = local_edges
         stats["edge_mode"] = "cached"
@@ -894,14 +690,11 @@ def incremental_revalidate(
         stats["_edges_obj"] = ledges  # callers may retain + maintain it
     if ledges is not None:
         stats.setdefault("edge_mode", "collected")
-        acc = ledges.expand_dep(fp, seeds, max_affected)
+        expand = ledges.expand
     else:
         stats["edge_mode"] = "spark_hops"
-        dep = _dep_edges(triples, fp.fwd_preds, fp.inv_preds)
-        rdep = _dep_edges(triples, fp.rec_fwd, fp.rec_inv) if has_rec else None
-        if not (fp.fwd_preds or fp.inv_preds):
-            dep = None
-        acc = _expand_local(spark, seeds, dep, rdep, fp.depth, max_affected)
+        expand = partial(_expand, _spark_hops(spark, triples, fp))
+    acc = expand(fp, "dep", "rdep", seeds, max_affected)
     if acc is None:
         return _full("full_escape")
 
@@ -927,16 +720,7 @@ def incremental_revalidate(
         ctx_seeds = set(acc) | {
             r["obj"] for r in ch_rows  # changed objects can be focus
         }
-        if ledges is not None:
-            ctx = ledges.expand_ctx(fp, ctx_seeds, max_affected)
-        else:
-            cdep = _ctx_edges(triples, fp.fwd_preds, fp.inv_preds)
-            crdep = (
-                _ctx_edges(triples, fp.rec_fwd, fp.rec_inv) if has_rec else None
-            )
-            ctx = _expand_local(
-                spark, ctx_seeds, cdep, crdep, fp.depth, max_affected
-            )
+        ctx = expand(fp, "cdep", "crdep", ctx_seeds, max_affected)
         if ctx is not None:
             stats["context_nodes"] = len(ctx)
             if local_max_rows:
@@ -962,46 +746,33 @@ def incremental_revalidate(
         # affected set against the FULL graph — still incremental
 
     if slice_rows is not None:
-            # LOCAL fast path: the slice fits on the driver; a Python
-            # interpreter walk costs milliseconds where the distributed
-            # Validator pays seconds of Catalyst plan-build + task
-            # scheduling for the same tiny input (r05; row-exactness
-            # pinned by tests/test_interp_exact.py)
-            from shacl_spark.shacl.engine import REPORT_OUT_SCHEMA
-            from shacl_spark.shacl.interp import Oracle
+        # LOCAL fast path: the slice fits on the driver; a Python
+        # interpreter walk costs milliseconds where the distributed
+        # Validator pays seconds of Catalyst plan-build + task
+        # scheduling for the same tiny input (row-exactness pinned by
+        # tests/test_interp_exact.py)
+        from shacl_spark.shacl.engine import REPORT_OUT_SCHEMA
+        from shacl_spark.shacl.interp import Oracle
 
-            results = Oracle(slice_rows, shapes).validate(only_keys=aff_keys)
-            stats["mode"] = "incremental_local"
-            new_rows = spark.createDataFrame(
-                [r.as_row() for r in results], REPORT_OUT_SCHEMA
-            )
-            prev_key = node_key_col(
-                F.col("focus_kind"), F.col("focus"),
-                F.col("focus_dt"), F.col("focus_lang"),
-            )
-            prev_keep = (
-                prev_report.withColumn("__k", prev_key)
-                .join(
-                    F.broadcast(aff.withColumnRenamed("node", "__k")),
-                    "__k",
-                    "left_anti",
-                )
-                .drop("__k")
-            )
-            return prev_keep.unionByName(new_rows)
-
-    # cache=False when validating the restricted slice: the slice is
-    # already one checkpointed in-memory frame, and per-branch persists
-    # only add block-manager churn to a plan whose cost is plan-build,
-    # not recomputation (profiled: ~1 s saved at the bench corpus)
-    new_rows = Validator(
-        spark,
-        v_triples,
-        shapes,
-        assume_distinct=assume_distinct,
-        only_nodes=aff,
-        cache=v_triples is triples,
-    ).validate()
+        results = Oracle(slice_rows, shapes).validate(only_keys=aff_keys)
+        stats["mode"] = "incremental_local"
+        new_rows = spark.createDataFrame(
+            [r.as_row() for r in results], REPORT_OUT_SCHEMA
+        )
+    else:
+        # cache=False when validating the restricted slice: the slice is
+        # already one checkpointed in-memory frame, and per-branch
+        # persists only add block-manager churn to a plan whose cost is
+        # plan-build, not recomputation (profiled: ~1 s saved at the
+        # bench corpus)
+        new_rows = Validator(
+            spark,
+            v_triples,
+            shapes,
+            assume_distinct=assume_distinct,
+            only_nodes=aff,
+            cache=v_triples is triples,
+        ).validate()
     prev_key = node_key_col(
         F.col("focus_kind"), F.col("focus"), F.col("focus_dt"), F.col("focus_lang")
     )

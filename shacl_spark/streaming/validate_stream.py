@@ -269,7 +269,7 @@ class StreamingValidator:
             # (journal rows are the exact net delta; op '-' retracts)
             from shacl_spark.shacl.incremental import shapes_footprint
 
-            self._edges.apply_delta(journal.collect(), shapes_footprint(self.shapes))
+            self._edges.apply_delta(journal, shapes_footprint(self.shapes))
             if self._edges.dirty or self._edges.n_rows > self._edge_cap:
                 self._edges = None
         if not self._versions():

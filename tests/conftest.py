@@ -8,7 +8,7 @@ from shacl_spark.session import get_spark
 # lets the heap of one long suite run grow past a 16 GB host's physical
 # memory, and the kernel then kills the JVM mid-suite (every later Spark
 # test fails with "Answer from Java side is empty")
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 
 @pytest.fixture(scope="session")

@@ -211,18 +211,19 @@ def test_inverse_path_direction(spark):
 def test_untouched_rows_carry_over_without_recompute(spark):
     """The merged report must KEEP prev rows for unaffected focus nodes
     and the affected set must stay small for a local delta."""
-    from shacl_spark.shacl.incremental import affected_node_keys
-
     base = triples_from_rows(spark, _base_rows())
-    changed = triples_from_rows(
-        spark, [("ex:p3", "ex:name", "N3", "literal", STR)]
+    added = [("ex:p3", "ex:name", "N3", "literal", STR)]
+    new = triples_from_rows(spark, _base_rows() + added)
+    prev = validate(spark, base, SHAPES)
+    st: dict = {}
+    inc = incremental_revalidate(
+        spark, new, triples_from_rows(spark, added), SHAPES, prev, stats=st
     )
-    fp = shapes_footprint(parse_shapes_graph(SHAPES))
-    aff = affected_node_keys(spark, base, changed, fp)
-    ids = {r["node"] for r in aff.collect()}
-    assert "ex:p3" in ids
+    assert st["mode"].startswith("incremental")
     # the delta is p3-local: bounded neighborhood, not the whole graph
-    assert len(ids) < 10
+    assert 1 <= st["affected"] < 10
+    assert _canon(inc) == _canon(validate(spark, new, SHAPES))
+
 
 def test_fixpoint_then_hop_sequence_path(spark):
     """ADVICE r03 (high): for sh:path (ex:q [sh:zeroOrMorePath ex:p])
@@ -290,8 +291,15 @@ def test_sparql_bgp_reaches_this_in_object_position(spark):
     assert _canon(inc) == _canon(full)  # the NEW violation must appear
 
 
+def _journal(spark, added, removed):
+    """A micro-batch journal frame: triple rows plus op '+' / '-'."""
+    return triples_from_rows(spark, added).withColumn("op", F.lit("+")).unionByName(
+        triples_from_rows(spark, removed).withColumn("op", F.lit("-"))
+    )
+
+
 def test_local_edges_delta_maintenance(spark):
-    """apply_delta-maintained adjacency == a fresh collect over the
+    """apply_delta-maintained edges == a fresh collect over the
     post-delta graph (the streaming steady-state contract), and a
     retraction the cache never saw trips ``dirty``."""
     from shacl_spark.shacl.incremental import collect_local_edges
@@ -307,21 +315,12 @@ def test_local_edges_delta_maintenance(spark):
     new_rows = [r for r in base if r not in removed] + added
 
     maintained = collect_local_edges(triples_from_rows(spark, base), fp, 500_000)
-    delta = [r.asDict() for r in triples_from_rows(spark, added).collect()]
-    for r in triples_from_rows(spark, removed).collect():
-        d = r.asDict()
-        d["op"] = "-"
-        delta.append(d)
-    maintained.apply_delta(delta, fp)
+    maintained.apply_delta(_journal(spark, added, removed), fp)
     assert not maintained.dirty
 
     fresh = collect_local_edges(triples_from_rows(spark, new_rows), fp, 500_000)
-
-    def _norm(adj):
-        return {k: sorted(v) for k, v in adj.items() if v}
-
     for fam in ("dep", "rdep", "cdep", "crdep"):
-        assert _norm(getattr(maintained, fam)) == _norm(getattr(fresh, fam)), fam
+        assert maintained.pairs(fam) == fresh.pairs(fam), fam
     assert maintained.n_rows == fresh.n_rows
 
     # incremental with the maintained cache == full validation
@@ -341,7 +340,32 @@ def test_local_edges_delta_maintenance(spark):
     assert _canon(inc) == _canon(validate(spark, new_df, SHAPES))
 
     # retracting an edge that was never added must trip the drift flag
-    # (use the ex:knows row — a footprint predicate; rdf:type is not)
-    bogus = dict(delta[1], op="-", subj="ex:neverthere")
-    maintained.apply_delta([bogus], fp)
+    # (an ex:knows row between known nodes — a footprint predicate;
+    # rdf:type is not)
+    maintained.apply_delta(_journal(spark, [], [("ex:p1", "ex:knows", "ex:p5")]), fp)
     assert maintained.dirty
+
+
+def test_local_edges_vocabulary_bounded_under_churn(spark):
+    """Node churn (each batch adds an edge between two fresh nodes and
+    retracts the previous batch's) must not grow the cached vocabulary
+    without bound: dead codes are compacted away once they outnumber
+    the live ones, and the edges still equal a fresh collect."""
+    from shacl_spark.shacl.incremental import collect_local_edges
+
+    fp = shapes_footprint(parse_shapes_graph(SHAPES))
+    base = _base_rows()
+    edges = collect_local_edges(triples_from_rows(spark, base), fp, 500_000)
+    prev: list[tuple] = []
+    for i in range(16):
+        cur = [(f"ex:c{i}", "ex:knows", f"ex:d{i}")]
+        edges.apply_delta(_journal(spark, cur, prev), fp)
+        prev = cur
+        live = {x for fam in ("dep", "rdep", "cdep", "crdep")
+                for pair in edges.pairs(fam) for x in pair}
+        assert len(edges._vocab) <= 2 * len(live), i
+    assert not edges.dirty
+    fresh = collect_local_edges(triples_from_rows(spark, base + prev), fp, 500_000)
+    for fam in ("dep", "rdep", "cdep", "crdep"):
+        assert edges.pairs(fam) == fresh.pairs(fam), fam
+    assert edges.n_rows == fresh.n_rows
