@@ -13,7 +13,7 @@ Layout
 - ``functions``  : column-expression helpers (RDF term keys, IRIs,
                    hashing, vector math) — JVM-side, codegen-friendly.
 - ``kg``         : the KG-construction pipeline (extract → link →
-                   canonicalize → materialize, checkpoint/resume, skew).
+                   canonicalize → materialize, checkpoint/resume).
 - ``shacl``      : SHACL core — shapes model, parser, targets, paths,
                    constraint components, compiler, validation report.
 - ``operators``  : general-purpose large-scale operators (dedup,

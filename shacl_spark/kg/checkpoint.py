@@ -1,55 +1,86 @@
 """Checkpoint/resume manifest (SURVEY.md §2.A A14; BASELINE.json:14
 "resumable from checkpoint with per-partition lineage + metrics").
 
-The unit of resumability is the deterministic extraction partition
-``part_id`` (a pure hash of file identity — stable across reruns and
-physical repartitioning).  Each completed partition writes its triples
-under ``part_id=<k>/`` plus a manifest row; a rerun anti-joins the
-manifest and processes only pending partitions.  Writes are idempotent
-per partition (overwrite of the partition directory).
+The unit of resumability is a group of deterministic extraction
+partitions ``part_id`` (a pure hash of file identity — stable across
+reruns and physical repartitioning).  Each group is one Spark job: one
+scan of its slice of the corpus and one plain parquet file set under
+``triples/group=<g>/``, with ``part_id`` kept as a data column.  A
+manifest file naming the group's partitions is written after the data
+commit; a rerun skips groups whose partitions are all in the manifest
+and overwrites any other group, so a kill between the two redoes that
+group idempotently.
+
+Group rule: one group per ``GROUP_INPUT_BYTES`` of the corpus files the
+extraction reads (at least one, at most ``n_parts``).  A small corpus
+is one group, one job and one scan; a large one still loses at most
+one group of work to a kill.
 """
 
 from __future__ import annotations
 
+import glob
 import json
+import math
 import os
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+GROUP_INPUT_BYTES = 1 << 30
+
+
+def input_bytes(df: DataFrame) -> int:
+    """Bytes on disk of the files ``df`` scans (0 for in-memory data).
+    File metadata only: no Spark job and no plan-size estimate.  Local
+    files are stat'ed directly (a Hadoop file-status call through the
+    JVM gateway costs milliseconds per file)."""
+    jvm = df.sparkSession._jvm
+    conf = df.sparkSession._jsc.hadoopConfiguration()
+    total = 0
+    for f in df.inputFiles():
+        url = urlparse(f)
+        if url.scheme == "file":
+            total += os.path.getsize(unquote(url.path))
+        else:
+            path = jvm.org.apache.hadoop.fs.Path(f)
+            total += path.getFileSystem(conf).getFileStatus(path).getLen()
+    return total
 
 
 def manifest_path(ckpt_dir: str) -> str:
     return os.path.join(ckpt_dir, "_manifest")
 
 
-def completed_partitions(spark: SparkSession, ckpt_dir: str) -> set[int]:
-    path = manifest_path(ckpt_dir)
-    if not os.path.isdir(path):
-        return set()
-    rows = spark.read.json(path).collect()
-    return {int(r["part_id"]) for r in rows}
+def completed_partitions(ckpt_dir: str) -> set[int]:
+    """The partitions named in the manifest (the driver wrote it; read
+    it without Spark)."""
+    done: set[int] = set()
+    for name in glob.glob(os.path.join(manifest_path(ckpt_dir), "group-*.json")):
+        with open(name) as f:
+            done.update(json.loads(line)["part_id"] for line in f if line.strip())
+    return done
 
 
 def run_with_checkpoints(
     triples: DataFrame,
     ckpt_dir: str,
-    group_size: int = 256,
+    group_size: int | None = None,
     n_parts: int = 1024,
 ) -> DataFrame:
-    """Write ``triples`` partitioned by part_id, skipping completed
-    groups; returns the full checkpointed triple set (reader over the
-    checkpoint dir).
+    """Write ``triples`` one group of ``part_id``s at a time, skipping
+    completed groups; returns the full checkpointed triple set (a
+    parquet scan over the checkpoint dir, same columns as ``triples``).
 
-    Partitions are processed in ``group_size`` batches (one Spark job
-    per batch, metrics per batch) so a mid-run kill loses at most one
-    batch of work.
-    """
-    spark = triples.sparkSession
-    done = completed_partitions(spark, ckpt_dir)
-    all_groups = sorted({p // group_size for p in range(n_parts)})
+    ``group_size`` defaults to the group rule in the module docstring."""
+    if group_size is None:
+        n_groups = min(n_parts, max(1, math.ceil(input_bytes(triples) / GROUP_INPUT_BYTES)))
+        group_size = math.ceil(n_parts / n_groups)
+    done = completed_partitions(ckpt_dir)
     pending = [
         g
-        for g in all_groups
+        for g in range(math.ceil(n_parts / group_size))
         if not all(p in done for p in range(g * group_size, (g + 1) * group_size))
     ]
 
@@ -59,20 +90,17 @@ def run_with_checkpoints(
     for g in pending:
         lo, hi = g * group_size, (g + 1) * group_size
         batch = triples.where((F.col("part_id") >= lo) & (F.col("part_id") < hi))
-        (
-            batch.write.mode("overwrite")
-            .partitionBy("part_id")
-            .parquet(os.path.join(data_dir, f"group={g}"))
-        )
+        batch.write.mode("overwrite").parquet(os.path.join(data_dir, f"group={g}"))
         # manifest rows are written AFTER the data commit — a kill between
         # the two re-does the group idempotently
-        rows = [
-            json.dumps({"part_id": p, "group": g})
-            for p in range(lo, hi)
-        ]
+        rows = [json.dumps({"part_id": p, "group": g}) for p in range(lo, hi)]
         with open(os.path.join(manifest_path(ckpt_dir), f"group-{g}.json"), "w") as f:
             f.write("\n".join(rows) + "\n")
 
-    return spark.read.option("basePath", data_dir).parquet(
-        os.path.join(data_dir, "group=*")
+    # the known schema skips the footer-inference job, and the explicit
+    # projection keeps the group directory out of the columns
+    return (
+        triples.sparkSession.read.schema(triples.schema)
+        .parquet(os.path.join(data_dir, "group=*"))
+        .select(*triples.columns)
     )

@@ -5,18 +5,28 @@ with per-partition lineage").
 In-sandbox the sink is parquet; on a cluster with the Iceberg runtime
 the same frames go through ``writeTo(...).partitionedBy(bucket(N,
 "subj"))`` — the writer is isolated here so that swap is one function.
-Writes are range-partitioned on the key (A16) so files are balanced
-and downstream scans get sorted, prunable files.
+
+The edge table is written first; the node table is derived from the
+written edge table, so the frame handed to ``write_graph`` is computed
+once.  Writes are range-partitioned on the key (A16), so each file
+holds a disjoint key range and downstream scans can prune files.
+File-count rule: one file per ``FILE_BYTES`` of the files the input
+frame scans (at least one).  A single file needs no range-boundary
+sampling job.
 """
 
 from __future__ import annotations
 
+import math
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from shacl_spark.functions.terms import KG, RDF_TYPE, triple_id
+from shacl_spark.functions.terms import RDF_TYPE, triple_id
+from shacl_spark.kg.checkpoint import input_bytes
+
+FILE_BYTES = 128 << 20
 
 
 def node_table(triples: DataFrame) -> DataFrame:
@@ -39,36 +49,37 @@ def edge_table(triples: DataFrame) -> DataFrame:
     return triples.withColumn("triple_id", triple_id())
 
 
-def write_graph(
-    triples: DataFrame,
-    out_dir: str,
-    num_files: int | None = None,
-) -> dict[str, int]:
-    """Materialize node + edge tables; returns observed row metrics.
+def read_edges(triples: DataFrame, out_dir: str) -> DataFrame:
+    """The edge table written from ``triples``, read back in its
+    columns (no row id).  The known schema skips parquet's
+    footer-inference job."""
+    return triples.sparkSession.read.schema(triples.schema).parquet(
+        os.path.join(out_dir, "edges")
+    )
 
-    Uses ``df.observe`` for metrics (no extra pass over the data) and
-    ``repartitionByRange`` for balanced, sorted output files.
-    """
-    from pyspark.sql import Observation
 
-    n = num_files or max(triples.sparkSession.sparkContext.defaultParallelism, 8)
-
+def _write_table(df: DataFrame, key: str, path: str) -> int:
+    """Range-partition ``df`` on ``key`` into files sized by the
+    file-count rule; returns the row count, observed during the write."""
+    n_files = max(1, math.ceil(input_bytes(df) / FILE_BYTES))
     # observe ABOVE the range exchange: repartitionByRange makes a
     # sampling pass over its child to pick boundaries, which would run a
     # child-side CollectMetrics twice and double the counts
-    edge_obs = Observation("edges")
-    edges = (
-        edge_table(triples)
-        .repartitionByRange(n, "subj")
-        .observe(edge_obs, F.count(F.lit(1)).alias("rows"))
+    obs = Observation(os.path.basename(path))
+    (
+        df.repartitionByRange(n_files, key)
+        .observe(obs, F.count(F.lit(1)).alias("rows"))
+        .write.mode("overwrite")
+        .parquet(path)
     )
-    edges.write.mode("overwrite").parquet(os.path.join(out_dir, "edges"))
+    return obs.get["rows"]
 
-    node_obs = Observation("nodes")
-    nodes = (
-        node_table(triples)
-        .repartitionByRange(n, "iri")
-        .observe(node_obs, F.count(F.lit(1)).alias("rows"))
+
+def write_graph(triples: DataFrame, out_dir: str) -> dict[str, int]:
+    """Materialize the edge table, then the node table read back from
+    it; returns the observed row counts."""
+    edges = _write_table(edge_table(triples), "subj", os.path.join(out_dir, "edges"))
+    nodes = _write_table(
+        node_table(read_edges(triples, out_dir)), "iri", os.path.join(out_dir, "nodes")
     )
-    nodes.write.mode("overwrite").parquet(os.path.join(out_dir, "nodes"))
-    return {"edges": edge_obs.get["rows"], "nodes": node_obs.get["rows"]}
+    return {"edges": edges, "nodes": nodes}

@@ -1,13 +1,14 @@
 """End-to-end KG construction plan (SURVEY.md §3.3, BASELINE.json:14):
 
     scan → extract (A1–A6, one Arrow-UDF stage) → dedup (A12)
-      → checkpoint triples (A14)
+      → checkpoint triples (A14; one write job per corpus-sized group)
       → link + canonicalize (A7–A11)
-      → validate against the SHACL metamodel (§2.B)
-      → materialize node/edge tables + metrics (A13, A16)
+      → materialize the edge table, then the node table from it (A13, A16)
+      → validate the written edge table against the SHACL metamodel (§2.B)
 
-Everything except the CC loop is ONE lazy DAG; control returns to the
-driver only at checkpoint writes and CC convergence checks.
+Each intermediate is computed once: the canonical rewrite runs only
+inside the edge-table write, and the node table, the validator and the
+returned triples all read that written table back.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from shacl_spark.kg.canon import canonicalize
 from shacl_spark.kg.checkpoint import run_with_checkpoints
 from shacl_spark.kg.extract import extract_triples
-from shacl_spark.kg.materialize import write_graph
+from shacl_spark.kg.materialize import read_edges, write_graph
 from shacl_spark.shacl import validate
 
 
@@ -42,21 +43,24 @@ def build_kg(
 ) -> KgBuildResult:
     """Run the full pipeline over a source-code corpus
     ``(repo, path, commit, lang, content)``; returns the canonical
-    triples, the validation report, and write metrics."""
+    triples (read back from the edge table), the validation report, and
+    write metrics."""
     triples = extract_triples(corpus, n_parts=n_parts)
 
     if ckpt:
         ckpt_dir = os.path.join(out_dir, "checkpoint")
         triples = run_with_checkpoints(triples, ckpt_dir, n_parts=n_parts)
 
-    canonical = canonicalize(triples, threshold=link_threshold)
+    # a checkpointed input is already a parquet scan: materializing it
+    # again in canonicalize would buy nothing
+    canonical = canonicalize(triples, threshold=link_threshold, checkpoint_input=not ckpt)
+    metrics = write_graph(canonical, out_dir)
+    triples = read_edges(canonical, out_dir)
 
     report = (
         # canonical triples are distinct by construction (A12 dedup)
-        validate(spark, canonical, shapes_rows, assume_distinct=True)
+        validate(spark, triples, shapes_rows, assume_distinct=True)
         if shapes_rows
         else spark.createDataFrame([], "focus string, component string")
     )
-
-    metrics = write_graph(canonical, out_dir)
-    return KgBuildResult(triples=canonical, report=report, metrics=metrics)
+    return KgBuildResult(triples=triples, report=report, metrics=metrics)

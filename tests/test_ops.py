@@ -1,5 +1,5 @@
 """Operator unit tests: dedup family, similarity, as-of join, text
-analysis, multimodal plumbing, skew handling."""
+analysis, multimodal plumbing."""
 
 from __future__ import annotations
 
@@ -19,7 +19,6 @@ from shacl_spark.operators.dedup import (
 from shacl_spark.operators.multimodal import extract_features, frame_sample_plan, synth_media
 from shacl_spark.operators.similarity import brute_force_topk, lsh_topk
 from shacl_spark.operators.text import text_stats
-from shacl_spark.kg.skew import heavy_hitters, salted_join
 
 DOC = "the quick brown fox jumps over the lazy dog and runs far away today"
 NEAR = "the quick brown fox jumps over the lazy dog and runs far away tonight"
@@ -193,22 +192,6 @@ def test_multimodal_plumbing(spark):
     plan = frame_sample_plan(media, every_ms=10_000)
     assert plan.count() > 0
     assert plan.where(F.col("frame_ts_ms") % 10_000 != 0).count() == 0
-
-
-def test_salted_join_matches_plain_join(spark):
-    big = spark.createDataFrame(
-        [(k, i) for i in range(200) for k in (["hot"] if i % 2 == 0 else [f"k{i}"])],
-        ["key", "val"],
-    )
-    small = spark.createDataFrame(
-        [("hot", "H"), ("k1", "A"), ("k3", "B")], ["key", "tag"]
-    )
-    hot = heavy_hitters(big, "key", threshold=10, sample_fraction=1.0)
-    out = salted_join(big, small, "key", salt=4, hot_keys=hot)
-    plain = big.join(small, "key")
-    assert sorted(map(tuple, out.select("key", "val", "tag").collect())) == sorted(
-        map(tuple, plain.select("key", "val", "tag").collect())
-    )
 
 
 def test_ivf_topk_self_match_and_recall(spark):

@@ -3,10 +3,12 @@ validation of pipeline output, resume-after-kill identity."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 from pyspark.sql import functions as F
 
+from shacl_spark.kg import checkpoint
 from shacl_spark.kg.checkpoint import completed_partitions, run_with_checkpoints
 from shacl_spark.kg.extract import extract_triples
 from shacl_spark.plans.kg_pipeline import build_kg
@@ -61,8 +63,6 @@ def test_resume_after_kill_produces_identical_tables(spark, tmp_path):
     partial_dir = tmp_path / "partial"
     run_with_checkpoints(triples, str(partial_dir), group_size=16, n_parts=N_PARTS)
     # wipe manifests + data for groups >= 2 → "killed" mid-run
-    import os
-
     for name in os.listdir(partial_dir / "_manifest"):
         if name not in ("group-0.json", "group-1.json"):
             os.remove(partial_dir / "_manifest" / name)
@@ -70,7 +70,7 @@ def test_resume_after_kill_produces_identical_tables(spark, tmp_path):
         if name not in ("group=0", "group=1"):
             shutil.rmtree(partial_dir / "triples" / name)
 
-    done_before = completed_partitions(spark, str(partial_dir))
+    done_before = completed_partitions(str(partial_dir))
     assert done_before == set(range(32))
 
     # resume: only the missing groups are reprocessed
@@ -78,6 +78,52 @@ def test_resume_after_kill_produces_identical_tables(spark, tmp_path):
         triples, str(partial_dir), group_size=16, n_parts=N_PARTS
     )
     assert _sorted_triples(out_resumed) == golden
+
+
+def test_default_group_rule(spark, tmp_path, monkeypatch):
+    """A small corpus is one group: one file set, no per-part_id
+    directories, every partition in the manifest.  The group count
+    follows the corpus bytes."""
+    synth_corpus(spark, 40, parts=4).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    triples = extract_triples(corpus, n_parts=N_PARTS)
+
+    out = run_with_checkpoints(triples, str(tmp_path / "one"), n_parts=N_PARTS)
+    data = tmp_path / "one" / "triples"
+    assert os.listdir(data) == ["group=0"]
+    assert not [p for p in (data / "group=0").iterdir() if p.name.startswith("part_id=")]
+    assert completed_partitions(str(tmp_path / "one")) == set(range(N_PARTS))
+    assert out.columns == triples.columns
+    golden = _sorted_triples(out)
+
+    corpus_bytes = checkpoint.input_bytes(triples)
+    assert corpus_bytes > 0
+    monkeypatch.setattr(checkpoint, "GROUP_INPUT_BYTES", corpus_bytes // 4 + 1)
+    out = run_with_checkpoints(triples, str(tmp_path / "four"), n_parts=N_PARTS)
+    assert len(os.listdir(tmp_path / "four" / "triples")) == 4
+    assert _sorted_triples(out) == golden
+
+
+def test_checkpointed_build_equals_direct_build(spark, tmp_path):
+    """Checkpointing changes how the KG is computed, not what it is:
+    the same edge columns, rows and triple ids, and the same report."""
+    corpus = synth_corpus(spark, 40, parts=4).withColumn(
+        "lang", F.when(F.hash("path") % 4 == 0, "cobol").otherwise(F.col("lang"))
+    )
+    built = {}
+    for ckpt in (True, False):
+        out_dir = str(tmp_path / f"ckpt-{ckpt}")
+        res = build_kg(
+            spark, corpus, out_dir, shapes_rows=KG_METAMODEL, n_parts=N_PARTS, ckpt=ckpt
+        )
+        edges = spark.read.parquet(os.path.join(out_dir, "edges"))
+        built[ckpt] = (
+            edges.columns,
+            sorted(map(tuple, edges.collect()), key=repr),
+            sorted(map(tuple, res.report.collect()), key=repr),
+        )
+    assert built[True][2], "the planted languages should be reported"
+    assert built[True] == built[False]
 
 
 def test_lineage_columns_populated(spark, tmp_path):
