@@ -14,7 +14,9 @@ group idempotently.
 Group rule: one group per ``GROUP_INPUT_BYTES`` of the corpus files the
 extraction reads (at least one, at most ``n_parts``).  A small corpus
 is one group, one job and one scan; a large one still loses at most
-one group of work to a kill.
+one group of work to a kill.  A corpus with no listed files (in-memory
+data, a non-file source) has no known size and keeps groups of
+``UNSIZED_GROUP_SIZE`` partitions.
 """
 
 from __future__ import annotations
@@ -23,30 +25,31 @@ import glob
 import json
 import math
 import os
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 GROUP_INPUT_BYTES = 1 << 30
+UNSIZED_GROUP_SIZE = 256
 
 
 def input_bytes(df: DataFrame) -> int:
-    """Bytes on disk of the files ``df`` scans (0 for in-memory data).
-    File metadata only: no Spark job and no plan-size estimate.  Local
-    files are stat'ed directly (a Hadoop file-status call through the
-    JVM gateway costs milliseconds per file)."""
-    jvm = df.sparkSession._jvm
-    conf = df.sparkSession._jsc.hadoopConfiguration()
-    total = 0
-    for f in df.inputFiles():
-        url = urlparse(f)
-        if url.scheme == "file":
-            total += os.path.getsize(unquote(url.path))
-        else:
-            path = jvm.org.apache.hadoop.fs.Path(f)
-            total += path.getFileSystem(conf).getFileStatus(path).getLen()
-    return total
+    """Bytes on disk of the files ``df`` scans: the file lengths Spark's
+    file index already listed, summed once per distinct scan (0 when no
+    leaf of the plan is a file scan, e.g. in-memory or checkpointed
+    data).  No Spark job, no file-system call per file, and not
+    Catalyst's plan-size estimate."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    sizes = {}
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() != "LogicalRelation":
+            continue
+        relation = leaf.relation()
+        if relation.getClass().getSimpleName() == "HadoopFsRelation":
+            index = relation.location()
+            sizes[index.rootPaths().toString()] = index.sizeInBytes()
+    return sum(sizes.values())
 
 
 def manifest_path(ckpt_dir: str) -> str:
@@ -75,8 +78,12 @@ def run_with_checkpoints(
 
     ``group_size`` defaults to the group rule in the module docstring."""
     if group_size is None:
-        n_groups = min(n_parts, max(1, math.ceil(input_bytes(triples) / GROUP_INPUT_BYTES)))
-        group_size = math.ceil(n_parts / n_groups)
+        n_bytes = input_bytes(triples)
+        if n_bytes:
+            n_groups = min(n_parts, math.ceil(n_bytes / GROUP_INPUT_BYTES))
+            group_size = math.ceil(n_parts / n_groups)
+        else:
+            group_size = UNSIZED_GROUP_SIZE
     done = completed_partitions(ckpt_dir)
     pending = [
         g

@@ -12,7 +12,9 @@ once.  Writes are range-partitioned on the key (A16), so each file
 holds a disjoint key range and downstream scans can prune files.
 File-count rule: one file per ``FILE_BYTES`` of the files the input
 frame scans (at least one).  A single file needs no range-boundary
-sampling job.
+sampling job.  A frame with no file scan under it (a build without the
+checkpoint, whose canonical input is a local checkpoint) has no known
+size and keeps one file per core, at least ``UNSIZED_FILES``.
 """
 
 from __future__ import annotations
@@ -27,6 +29,7 @@ from shacl_spark.functions.terms import RDF_TYPE, triple_id
 from shacl_spark.kg.checkpoint import input_bytes
 
 FILE_BYTES = 128 << 20
+UNSIZED_FILES = 8
 
 
 def node_table(triples: DataFrame) -> DataFrame:
@@ -61,7 +64,11 @@ def read_edges(triples: DataFrame, out_dir: str) -> DataFrame:
 def _write_table(df: DataFrame, key: str, path: str) -> int:
     """Range-partition ``df`` on ``key`` into files sized by the
     file-count rule; returns the row count, observed during the write."""
-    n_files = max(1, math.ceil(input_bytes(df) / FILE_BYTES))
+    n_bytes = input_bytes(df)
+    if n_bytes:
+        n_files = math.ceil(n_bytes / FILE_BYTES)
+    else:
+        n_files = max(df.sparkSession.sparkContext.defaultParallelism, UNSIZED_FILES)
     # observe ABOVE the range exchange: repartitionByRange makes a
     # sampling pass over its child to pick boundaries, which would run a
     # child-side CollectMetrics twice and double the counts

@@ -8,7 +8,7 @@ import shutil
 
 from pyspark.sql import functions as F
 
-from shacl_spark.kg import checkpoint
+from shacl_spark.kg import checkpoint, materialize
 from shacl_spark.kg.checkpoint import completed_partitions, run_with_checkpoints
 from shacl_spark.kg.extract import extract_triples
 from shacl_spark.plans.kg_pipeline import build_kg
@@ -103,6 +103,15 @@ def test_default_group_rule(spark, tmp_path, monkeypatch):
     assert len(os.listdir(tmp_path / "four" / "triples")) == 4
     assert _sorted_triples(out) == golden
 
+    # in-memory data lists no files: its size is unknown, so it keeps
+    # fixed-size groups instead of collapsing into one
+    unsized = extract_triples(synth_corpus(spark, 40, parts=4), n_parts=N_PARTS)
+    assert checkpoint.input_bytes(unsized) == 0
+    monkeypatch.setattr(checkpoint, "UNSIZED_GROUP_SIZE", N_PARTS // 4)
+    out = run_with_checkpoints(unsized, str(tmp_path / "unsized"), n_parts=N_PARTS)
+    assert len(os.listdir(tmp_path / "unsized" / "triples")) == 4
+    assert _sorted_triples(out) == golden
+
 
 def test_checkpointed_build_equals_direct_build(spark, tmp_path):
     """Checkpointing changes how the KG is computed, not what it is:
@@ -124,6 +133,18 @@ def test_checkpointed_build_equals_direct_build(spark, tmp_path):
         )
     assert built[True][2], "the planted languages should be reported"
     assert built[True] == built[False]
+
+
+def test_unsized_build_spreads_edge_files(spark, tmp_path, monkeypatch):
+    """Without the checkpoint the canonical frame scans no files (its
+    input is a local checkpoint), so the edge write cannot size itself
+    from bytes on disk; it still spreads over more than one file."""
+    synth_corpus(spark, 20, parts=2).write.parquet(str(tmp_path / "corpus"))
+    corpus = spark.read.parquet(str(tmp_path / "corpus"))
+    monkeypatch.setattr(materialize, "FILE_BYTES", checkpoint.input_bytes(corpus) // 4 + 1)
+    build_kg(spark, corpus, str(tmp_path / "kg"), n_parts=N_PARTS, ckpt=False)
+    edge_files = [n for n in os.listdir(tmp_path / "kg" / "edges") if n.endswith(".parquet")]
+    assert len(edge_files) > 1
 
 
 def test_lineage_columns_populated(spark, tmp_path):
