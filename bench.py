@@ -238,6 +238,7 @@ def run_kg(spark, n_files: int, with_validate: bool | None = None) -> dict:
         import shutil
         import tempfile
 
+        from shacl_spark.functions.terms import TRIPLE_COLS
         from shacl_spark.streaming.validate_stream import StreamingValidator
 
         # a completed epoch replays as a no-op (by design), so warm
@@ -252,10 +253,10 @@ def run_kg(spark, n_files: int, with_validate: bool | None = None) -> dict:
                     spark, shapes, os.path.join(sdir, "t"), os.path.join(sdir, "r"),
                     n_parts=32,
                 )
-                six = ["subj", "pred", "obj", "obj_kind", "obj_dt", "obj_lang"]
-                sv._on_batch(base.select(six), 0)  # seed the target (epoch 0)
+                # the sink takes full triple frames (lineage columns too)
+                sv._on_batch(base.select(TRIPLE_COLS), 0)  # seed the target (epoch 0)
                 s0 = time.time()
-                sv._on_batch(delta.select(six), 1)
+                sv._on_batch(delta.select(TRIPLE_COLS), 1)
                 stream_runs.append(time.time() - s0)
                 out["stream_report_rows"] = sv.current_report().count()
             finally:

@@ -4,13 +4,15 @@
     spark-submit --py-files shacl_spark.zip jobs/validate_stream.py \
         --stream  <dir of triple parquet files (file-source CDC feed)> \
         --shapes  <csv/parquet/ttl shapes graph> \
-        --target  <upsert target dir> \
+        --target  <merge-on-read triple target dir> \
         --report  <versioned report dir> \
+        [--cdc]      # the feed's files carry an 'op' column ('+' / '-')
         [--follow]   # keep running; default drains available input and exits
 
-Each micro-batch upserts (exactly-once, partition-pruned), incrementally
-revalidates only the affected focus nodes, and writes a new report
-version.  Prints a one-line JSON summary of the final report.
+Each micro-batch upserts and retracts (exactly-once, partition-pruned;
+a feed without ``--cdc`` is all upserts), incrementally revalidates
+only the affected focus nodes, and writes a new report version.
+Prints a one-line JSON summary of the final report.
 """
 
 from __future__ import annotations
@@ -28,10 +30,11 @@ def main(argv=None) -> int:
     p.add_argument("--report", required=True)
     p.add_argument("--n-parts", dest="n_parts", type=int, default=16)
     p.add_argument("--follow", action="store_true")
-    # r04: CDC feeds with retractions — stream rows carry an extra
-    # 'op' column ('+' upsert / '-' delete); the target becomes a
-    # merge-on-read tombstone table and deletes seed revalidation
-    p.add_argument("--cdc", action="store_true")
+    p.add_argument(
+        "--cdc", action="store_true",
+        help="the feed's files carry an 'op' column ('+' upsert / '-' "
+        "retract); without it every row is an upsert",
+    )
     p.add_argument("--master", default=None)
     args = p.parse_args(argv)
 
@@ -45,7 +48,7 @@ def main(argv=None) -> int:
     spark = get_spark("validate_stream", master=args.master)
     sv = StreamingValidator(
         spark, _read_shapes_rows(spark, args.shapes), args.target, args.report,
-        n_parts=args.n_parts, cdc=args.cdc,
+        n_parts=args.n_parts,
     )
     schema = TRIPLE_SCHEMA
     if args.cdc:

@@ -478,7 +478,7 @@ class _LocalEdges:
         """Roll the edges forward by a NET graph delta: ``journal`` has
         the six triple columns and optionally ``op`` ('-' retracts; no
         ``op`` adds).  Rows must be the exact live-set delta (both
-        sinks' ``_compute_delta`` guarantee this) or ``dirty`` trips and
+        sink's ``_compute_delta`` guarantees this) or ``dirty`` trips and
         the caller rebuilds."""
         import pyarrow.compute as pc
 

@@ -1,46 +1,68 @@
-"""Exactly-once streaming triple upsert via foreachBatch (SURVEY.md
-§2.E "stateful dedup/CDC").
+"""Exactly-once streaming triple upsert with retractions (SURVEY.md
+§2.E "stateful dedup/CDC"): one merge-on-read tombstone sink.
 
 Without a Delta/Iceberg MERGE target in this container, the upsert is
-emulated scale-correctly: the target is hash-partitioned on the triple
-identity (``part=pmod(xxhash64(tid), n_parts)``) and each micro-batch
+emulated scale-correctly.  Each batch row carries an ``op`` column
+(``'+'`` upsert / ``'-'`` delete); a batch without one is all ``'+'``,
+so an adds-only feed is a CDC feed with no retractions.  The target is
+APPEND-ONLY and hash-partitioned on the triple identity
+(``part=pmod(xxhash64(tid), n_parts)``): every accepted change is
+written as ``(triple, op, seq)`` and :meth:`TombstoneTripleSink.current`
+reconstructs the live set by keeping the highest-``seq`` op per triple
+identity and filtering to ``'+'`` — the merge-on-read shape
+(Hudi/Iceberg MOR); on a real table a background compaction folds
+tombstones, here :meth:`TombstoneTripleSink.compact` does.
 
-1. dedups itself on ``tid``,
-2. anti-joins against ONLY the touched partitions of the target
-   (partition pruning: the scan reads just those directories, just the
-   identity columns), and
-3. APPENDS the genuinely-new rows through Spark's file-commit protocol.
+Each micro-batch
+
+1. nets itself per ``tid`` (``'-'`` wins a same-batch ``+``/``-``
+   pair: the net effect of add+retract is absence),
+2. reads ONLY the touched partitions of the target (partition pruning:
+   the scan reads just those directories) to find which triples are
+   live and the next ``seq``, and
+3. APPENDS the rows that change the live set through Spark's
+   file-commit protocol.
 
 This is O(|batch| + |touched partitions|) per batch — not O(|target|)
-— and there is no delete/rename swap window at all: a crash mid-write
-leaves only uncommitted ``_temporary`` files, which parquet reads
-ignore, and a foreachBatch epoch replay re-runs the anti-join and
-appends nothing (idempotent).  The one non-atomic edge is a crash
-DURING job commit (some task files renamed, some not); a replay then
-re-appends rows whose files already committed, so :meth:`current`
-dedups on the content identity by default — belt to the commit
-protocol's braces.  On a cluster with Delta/Iceberg the body of
-``_merge_batch`` becomes a single MERGE INTO; the streaming
-scaffolding is unchanged.
+— and there is no delete/rename swap window: a crash mid-write leaves
+only uncommitted ``_temporary`` files, which parquet reads ignore.  The
+one non-atomic edge is a crash DURING job commit (some task files
+renamed, some not); a replay then re-appends rows whose files already
+committed, which are equal ``(tid, seq, op)`` duplicates that the
+window in :meth:`TombstoneTripleSink._latest` collapses.  On a cluster
+with Delta/Iceberg the append becomes a single MERGE INTO; the
+streaming scaffolding is unchanged.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
+from pyspark.sql import Window as W
 
-from shacl_spark.functions.terms import TRIPLE_SCHEMA, triple_id
+from shacl_spark.functions.terms import TRIPLE_COLS, TRIPLE_SCHEMA, triple_id
 
-_PARTED_SCHEMA = T.StructType(
-    list(TRIPLE_SCHEMA.fields) + [T.StructField("part", T.IntegerType(), True)]
+# the target's (and the journal's) layout, given to every read so that
+# no read pays a schema-inference job
+_TARGET_SCHEMA = T.StructType(
+    list(TRIPLE_SCHEMA.fields)
+    + [
+        T.StructField("op", T.StringType(), True),
+        T.StructField("seq", T.LongType(), True),
+        T.StructField("part", T.IntegerType(), True),
+    ]
 )
 
 
-class TripleUpsertSink:
+def batch_op(batch: DataFrame) -> Column:
+    """The batch's ``op``: a batch without the column is all ``'+'``."""
+    return F.col("op") if "op" in batch.columns else F.lit("+")
+
+
+class TombstoneTripleSink:
     def __init__(self, spark: SparkSession, target_dir: str, n_parts: int = 16):
         """``n_parts`` fixes the target's hash-partition count — pick
         ~(total size / healthy file size) at deployment scale; it must
@@ -49,124 +71,12 @@ class TripleUpsertSink:
         self.target_dir = target_dir
         self.n_parts = n_parts
 
-    def _part(self):
-        return F.pmod(F.xxhash64(F.col("tid")), F.lit(self.n_parts)).cast("int")
-
-    def _read_target(self) -> DataFrame | None:
-        if not os.path.isdir(self.target_dir):
-            return None
-        has_data = any(
-            f.startswith("part=") for f in os.listdir(self.target_dir)
-        )
-        if not has_data:
-            return None
-        return self.spark.read.schema(_PARTED_SCHEMA).parquet(self.target_dir)
-
-    def current(self, dedup: bool = True) -> DataFrame:
-        """The merged triple state.  ``dedup=True`` (default) collapses
-        the rare duplicate left by a crash during job commit + epoch
-        replay; pass False on the fast path when no crash recovery is
-        in play."""
-        existing = self._read_target()
-        if existing is None:
-            return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        out = existing.drop("part")
-        if dedup:
-            out = out.withColumn("tid", triple_id()).dropDuplicates(["tid"]).drop("tid")
-        return out
-
-    def _compute_delta(self, batch: DataFrame) -> DataFrame:
-        """The rows of ``batch`` genuinely absent from the target
-        (materialized; carries ``tid``/``part``) — the anti-join half
-        of the merge, split out so a consumer can durably record the
-        delta BEFORE the append (streaming/validate_stream.py's
-        crash-atomicity protocol)."""
-        batch = (
-            batch.withColumn("tid", triple_id())
-            .dropDuplicates(["tid"])
-            .withColumn("part", self._part())
-        )
-        existing = self._read_target()
-        if existing is not None:
-            # touched partitions only: the IN-list predicate prunes the
-            # partitioned scan to those directories, and only the
-            # identity columns are read
-            touched = [r["part"] for r in batch.select("part").distinct().collect()]
-            if touched:
-                seen = (
-                    existing.where(F.col("part").isin(touched))
-                    .withColumn("tid", triple_id())
-                    .select("tid")
-                )
-                batch = batch.join(seen, "tid", "left_anti")
-        return batch.localCheckpoint(eager=True)
-
-    def _append(self, applied: DataFrame) -> None:
-        """Append a precomputed delta (from :meth:`_compute_delta`)
-        through the file-commit protocol.  The delta is clustered by
-        ``part`` first so each touched partition directory receives ONE
-        file per batch instead of one per (task × part) — a k-task
-        delta otherwise commits k×|touched| tiny files, and the commit
-        protocol's per-file rename dominates small-batch appends
-        (guide §6 "small files hurt twice")."""
-        (
-            applied.drop("tid")
-            .repartition(F.col("part"))
-            .write.mode("append")
-            .partitionBy("part")
-            .parquet(self.target_dir)
-        )
-
-    def _merge_batch(self, batch: DataFrame, epoch_id: int) -> DataFrame:
-        """Merge one micro-batch; returns the genuinely-NEW rows (the
-        applied delta, materialized) — streaming consumers like the
-        incremental validator key their work off it."""
-        applied = self._compute_delta(batch)
-        self._append(applied)
-        return applied.drop("tid", "part")
-
-    def start(self, stream: DataFrame, trigger_available_now: bool = True):
-        writer = stream.writeStream.foreachBatch(self._merge_batch).outputMode("append")
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
-
-
-class TombstoneTripleSink:
-    """CDC upsert WITH DELETES (r04): merge-on-read tombstones.
-
-    The append-only :class:`TripleUpsertSink` models adds-only feeds;
-    real CDC streams retract.  Here each batch row carries an ``op``
-    column (``'+'`` upsert / ``'-'`` delete) and the target stays
-    APPEND-ONLY anyway: every accepted change is written as
-    ``(triple, op, seq=epoch)`` into the same hash-partitioned layout,
-    and :meth:`current` reconstructs the live set by keeping the
-    highest-``seq`` op per triple identity and filtering to ``'+'`` —
-    the merge-on-read shape (Hudi/Iceberg MOR); on a real table a
-    background compaction folds tombstones, here :meth:`compact` does.
-
-    Scale: merges stay O(batch + touched partitions) via partition
-    pruning exactly like the adds-only sink; the read side pays one
-    window over the touched data (compaction amortizes it away).
-
-    Within one batch, ``'-'`` wins over ``'+'`` for the same triple
-    (net effect of a same-batch add+retract is absence) — documented
-    determinism, not an ordering guess."""
-
-    def __init__(self, spark: SparkSession, target_dir: str, n_parts: int = 16):
-        self.spark = spark
-        self.target_dir = target_dir
-        self.n_parts = n_parts
-
-    def _part(self):
-        return F.pmod(F.xxhash64(F.col("tid")), F.lit(self.n_parts)).cast("int")
-
     def _read_target(self) -> DataFrame | None:
         if not os.path.isdir(self.target_dir):
             return None
         if not any(f.startswith("part=") for f in os.listdir(self.target_dir)):
             return None
-        return self.spark.read.parquet(self.target_dir)
+        return self.spark.read.schema(_TARGET_SCHEMA).parquet(self.target_dir)
 
     @staticmethod
     def _latest(df: DataFrame) -> DataFrame:
@@ -174,8 +84,6 @@ class TombstoneTripleSink:
         ties so ``'-'`` wins ('-' > '+' in ASCII — a crash-replayed
         append only ever duplicates (tid, seq) with the SAME op, so
         ties are equal-op duplicates or a same-batch +/- pair)."""
-        from pyspark.sql import Window as W
-
         df = df.withColumn("tid", triple_id())
         w = W.partitionBy("tid").orderBy(F.desc("seq"), F.desc("op"))
         return (
@@ -185,64 +93,72 @@ class TombstoneTripleSink:
         )
 
     def current(self) -> DataFrame:
-        """The live triple set (6-column frame)."""
+        """The live triple set (triple columns only)."""
         existing = self._read_target()
         if existing is None:
             return self.spark.createDataFrame([], TRIPLE_SCHEMA)
-        live = self._latest(existing).where(F.col("op") == "+")
-        return live.drop("op", "seq", "part", "tid")
+        return self._latest(existing).where(F.col("op") == "+").select(TRIPLE_COLS)
 
-    def _compute_delta(self, batch: DataFrame, epoch_id: int):
-        """(applied, added, removed): ``applied`` carries tid/part/op/seq
-        rows to append; ``added``/``removed`` are 6-column frames of the
-        NET state changes (the incremental validator's ``changed``).
+    def _compute_delta(self, batch: DataFrame) -> DataFrame:
+        """``batch`` has the triple columns (``TRIPLE_COLS``; lineage
+        may be null) and optionally ``op``.  Returns the rows to append
+        (materialized; triple columns plus tid/op/part/seq): the NET
+        changes of the live set, which are also the incremental
+        validator's ``changed`` — split out from the append so a
+        consumer can durably record the delta BEFORE it
+        (streaming/validate_stream.py's crash-atomicity protocol).
+
+        The batch feeds one aggregate: per tid the triple columns of
+        one of its rows (all equal but lineage) and the net op, ``'-'``
+        winning (max in ASCII).
 
         ``seq`` is derived from the TARGET (max existing seq over the
-        touched partitions + 1), never from ``epoch_id``: a stream
-        restarted without a checkpoint location renumbers epochs from 0,
-        and an epoch-derived seq would let an old row outrank a newer
-        tombstone in :meth:`_latest` (ADVICE r04, medium).  Per-tid
-        ordering only needs the max over the tid's own partition (a tid
-        hashes to exactly one partition), so the pruned scan below is
-        sufficient AND O(touched), not O(target).  Crash-replay safety
-        is unchanged: the journal persists the assigned seq, so a replay
-        re-appends identical (tid, seq, op) rows (idempotent ties)."""
-        batch = batch.withColumn("tid", triple_id())
-        # net op per tid within the batch: '-' wins (max in ASCII)
-        net = (
-            batch.groupBy("tid")
-            .agg(F.max("op").alias("op"))
+        touched partitions + 1), never from an epoch id: a stream
+        restarted without a checkpoint location renumbers epochs from
+        0, and an epoch-derived seq would let an old row outrank a
+        newer tombstone in :meth:`_latest`.  Per-tid ordering only needs
+        the max over the tid's own partition (a tid hashes to exactly
+        one partition), so the pruned scan below is sufficient AND
+        O(touched), not O(target).  Crash-replay safety: the journal
+        persists the assigned seq, so a replay re-appends identical
+        (tid, seq, op) rows (idempotent ties)."""
+        rows = (
+            batch.withColumn("tid", triple_id())
+            .groupBy("tid")
+            .agg(
+                *[F.first(c).alias(c) for c in TRIPLE_COLS],
+                F.max(batch_op(batch)).alias("op"),
+            )
+            .withColumn("part", F.pmod(F.xxhash64("tid"), F.lit(self.n_parts)).cast("int"))
         )
-        rows = batch.drop("op").dropDuplicates(["tid"]).join(net, "tid")
-        rows = rows.withColumn("part", self._part())
         existing = self._read_target()
-        next_seq = 1
         if existing is None:
-            live_tids = self.spark.createDataFrame([], "tid string")
+            applied, next_seq = rows.where(F.col("op") == "+"), 1
         else:
             touched = [r["part"] for r in rows.select("part").distinct().collect()]
             pruned = existing.where(F.col("part").isin(touched)) if touched else existing.limit(0)
             pruned = pruned.localCheckpoint(eager=False)
-            live_tids = (
-                self._latest(pruned).where(F.col("op") == "+").select("tid")
+            live = (
+                self._latest(pruned)
+                .where(F.col("op") == "+")
+                .select("tid", F.lit(True).alias("__live"))
+            )
+            # an add changes the live set iff the triple is not live, a
+            # retraction iff it is
+            applied = (
+                rows.join(live, "tid", "left")
+                .where((F.col("op") == "+") == F.col("__live").isNull())
+                .drop("__live")
             )
             max_seq = pruned.agg(F.max("seq")).collect()[0][0]
             next_seq = (max_seq or 0) + 1
-        adds = rows.where(F.col("op") == "+").join(live_tids, "tid", "left_anti")
-        removes = rows.where(F.col("op") == "-").join(live_tids, "tid", "left_semi")
-        applied = (
-            adds.unionByName(removes)
-            .withColumn("seq", F.lit(next_seq).cast("long"))
-            .localCheckpoint(eager=True)
-        )
-        six = [f.name for f in TRIPLE_SCHEMA.fields]
-        return (
-            applied,
-            applied.where(F.col("op") == "+").select(six),
-            applied.where(F.col("op") == "-").select(six),
+        return applied.withColumn("seq", F.lit(next_seq).cast("long")).localCheckpoint(
+            eager=True
         )
 
     def _append(self, applied: DataFrame) -> None:
+        """Append a precomputed delta (from :meth:`_compute_delta`, or
+        its journal) through the file-commit protocol."""
         (
             applied.drop("tid")
             .write.mode("append")
@@ -250,12 +166,12 @@ class TombstoneTripleSink:
             .parquet(self.target_dir)
         )
 
-    def _merge_batch(self, batch: DataFrame, epoch_id: int) -> DataFrame:
-        """Merge one op-tagged micro-batch; returns the NET change rows
-        (6-column; additions and removals — both seed revalidation)."""
-        applied, added, removed = self._compute_delta(batch, epoch_id)
+    def _merge_batch(self, batch: DataFrame) -> DataFrame:
+        """Merge one micro-batch; returns the NET change rows (triple
+        columns; additions and removals)."""
+        applied = self._compute_delta(batch)
         self._append(applied)
-        return added.unionByName(removed)
+        return applied.select(TRIPLE_COLS)
 
     def compact(self) -> None:
         """Fold tombstones: rewrite the target to only the live rows

@@ -1,41 +1,42 @@
-"""Continuous SHACL validation of a triple CDC stream (r03): the
-capstone composition — Structured Streaming + the partitioned
-exactly-once upsert + incremental revalidation.
+"""Continuous SHACL validation of a triple CDC stream: the capstone
+composition — Structured Streaming + the partitioned exactly-once
+upsert + incremental revalidation.
 
-Each micro-batch:
+Each micro-batch, whether or not its rows carry an ``op`` column (none
+means all ``'+'``):
 
-1. upserts into the hash-partitioned triple target
-   (:class:`~shacl_spark.streaming.upsert.TripleUpsertSink` — O(batch),
-   idempotent on epoch replay) and gets back the GENUINELY-new rows,
-2. incrementally revalidates only the focus nodes that delta can
-   affect (shacl/incremental.py — work scales with |delta|, not
-   |graph|),
-3. persists the merged report under a new version directory
-   (``report_dir/v=<n>``) — versioned, append-only, so reading the
+1. computes its net change against the merge-on-read triple target
+   (:class:`~shacl_spark.streaming.upsert.TombstoneTripleSink` —
+   O(batch + touched partitions)) and, from an Observation on the same
+   job, a content fingerprint of the raw batch,
+2. journals that change durably (``report_dir/_delta/epoch=<id>``,
+   with an ``_fp_<fingerprint>`` file) and then appends it to the
+   target,
+3. incrementally revalidates only the focus nodes the change can
+   affect (shacl/incremental.py — additions and retractions both seed
+   it; work scales with |delta|, not |graph|),
+4. persists the merged report under a new version directory
+   (``report_dir/v=<n>``) with an ``_epoch_<id>_<fingerprint>`` marker,
+   then prunes the journal.  Versions are append-only, so reading the
    previous report and writing the next one never self-overwrites, and
    a crash mid-write leaves the previous version intact.
 
-Crash atomicity across the two writes (ADVICE r03, medium): the applied
-delta is journalled durably (``report_dir/_delta/epoch=<id>``) BEFORE
-the target append, and each report version carries an ``_epoch_<id>``
-marker naming the batch it incorporates.  An epoch replay then
-distinguishes the three crash windows:
+An epoch replay with a committed journal of the same fingerprint tells
+the crash windows apart:
 
-- no committed journal → normal path (recompute the delta; empty means
-  the epoch already fully applied or the batch is all-duplicate);
-- journal committed, marked report present → done, no-op;
-- journal committed, no marked report → the crash hit between the
-  journal write and the report write: finish the append (the anti-join
-  remainder is idempotent) and recompute the report from the JOURNAL's
-  delta over a defensively deduped target scan (a crash during job
-  commit can leave committed duplicate files — ``current(dedup=True)``
-  collapses them, so the recovery never validates a duplicated graph).
+- marked report present → the batch fully committed (the crash hit
+  after the marker, before the prune): no-op;
+- no marked report → the crash hit after the journal commit, after the
+  target append, or after the report's parquet commit but before its
+  marker: re-append the journal (equal ``(tid, seq, op)`` rows are
+  idempotent under merge-on-read) and recompute the report from the
+  JOURNAL's delta into the next version.
 
-Adds-only by default (append-only upsert target); ``cdc=True`` (r04)
-switches to the merge-on-read tombstone sink so batches may RETRACT
-triples ('op' column) and removals seed revalidation too.  On a
-Delta/Iceberg cluster the same loop runs against MERGE + snapshot
-reads.
+Without a matching journal a replay takes the normal path, whose delta
+is empty once the batch is applied.  The fingerprint, not the epoch id,
+keys the journal: a stream restarted without a checkpoint location
+numbers epochs from 0 again.  On a Delta/Iceberg cluster the same loop
+runs against MERGE + snapshot reads.
 """
 
 from __future__ import annotations
@@ -43,15 +44,34 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from shacl_spark.functions.terms import TRIPLE_SCHEMA
+from shacl_spark.functions.terms import TRIPLE_COLS, triple_id
 from shacl_spark.shacl.engine import REPORT_OUT_SCHEMA
-from shacl_spark.shacl.incremental import incremental_revalidate
+from shacl_spark.shacl.incremental import incremental_revalidate, shapes_footprint
 from shacl_spark.shacl.parser import parse_shapes_graph
 from shacl_spark.shacl.shapes import ShapesGraph
-from shacl_spark.streaming.upsert import TripleUpsertSink
+from shacl_spark.streaming.upsert import _TARGET_SCHEMA, TombstoneTripleSink, batch_op
+
+
+def fingerprint(batch: DataFrame) -> list[Column]:
+    """Order-independent content fingerprint of a micro-batch: the row
+    count and TWO independently-salted sums of ``xxhash64(tid, op)``
+    (colliding both needs the full hash width, not one lucky sum).
+    Decimal accumulators: a plain long sum of 2^63-range hashes
+    overflows under ANSI mode.  Epoch ids alone are NOT a safe replay
+    key (see the module docstring)."""
+    key = F.concat(triple_id(), batch_op(batch))
+    return [
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.xxhash64(key).cast("decimal(38,0)")).alias("s"),
+        F.sum(F.xxhash64(key, F.lit("\x02fp2")).cast("decimal(38,0)")).alias("s2"),
+    ]
+
+
+def _touch(path: str) -> None:
+    open(path, "w").close()
 
 
 class StreamingValidator:
@@ -64,32 +84,24 @@ class StreamingValidator:
         n_parts: int = 16,
         cdc: bool = False,
     ):
-        """``cdc=True`` (r04) switches the target to the tombstone sink:
-        batches carry an ``op`` column ('+' upsert / '-' delete) and
-        both additions AND retractions seed incremental revalidation —
-        a removed triple can clear violations or create new ones
-        (minCount)."""
+        """``cdc`` is accepted and ignored: every batch goes through the
+        one tombstone sink, and a batch without an ``op`` column is all
+        upserts."""
         self.spark = spark
         self.shapes: ShapesGraph = (
             shapes_rows_or_graph
             if isinstance(shapes_rows_or_graph, ShapesGraph)
             else parse_shapes_graph(shapes_rows_or_graph)
         )
-        self.cdc = cdc
-        if cdc:
-            from shacl_spark.streaming.upsert import TombstoneTripleSink
-
-            self.sink = TombstoneTripleSink(spark, target_dir, n_parts=n_parts)
-        else:
-            self.sink = TripleUpsertSink(spark, target_dir, n_parts=n_parts)
+        self.sink = TombstoneTripleSink(spark, target_dir, n_parts=n_parts)
         self.report_dir = report_dir
-        # steady-state edge cache (r05): the footprint-predicate
-        # adjacency collected by the first incremental batch is RETAINED
-        # and maintained by applying each batch's net delta, so later
-        # batches skip the per-batch full-graph edge collect entirely.
-        # A pure driver-side cache: crash/restart just loses it and the
-        # next batch rebuilds from the durable target (bounded by the
-        # same cap as the collect path).
+        # steady-state edge cache: the footprint-predicate adjacency
+        # collected by the first batch is RETAINED and maintained by
+        # applying each batch's net delta, so later batches skip the
+        # per-batch full-graph edge collect entirely.  A pure
+        # driver-side cache: crash/restart just loses it and the next
+        # batch rebuilds from the durable target (bounded by the same
+        # cap as the collect path).
         self._edges = None
         self._edge_cap = 500_000
 
@@ -121,33 +133,6 @@ class StreamingValidator:
     def _delta_dir(self, epoch_id: int) -> str:
         return os.path.join(self.report_dir, "_delta", f"epoch={epoch_id}")
 
-    @staticmethod
-    def _batch_fp(batch: DataFrame) -> str:
-        """Order-independent content fingerprint of a micro-batch
-        (count + sum of triple-identity hashes).  Epoch ids alone are
-        NOT a safe replay key: a stream restarted without a checkpoint
-        location numbers epochs from 0 again, and a journal/marker
-        keyed only by epoch would silently swallow or replace the new
-        batch (r04 review finding #1)."""
-        from shacl_spark.functions.terms import triple_id
-
-        key = (
-            F.concat(triple_id(), F.col("op"))
-            if "op" in batch.columns
-            else triple_id()
-        )
-        # TWO independently-salted sums (ADVICE r04, low): colliding a
-        # single additive xxhash64 sum needs only a lucky (count, sum)
-        # pair; colliding both salted sums simultaneously requires
-        # breaking the full hash width.  Decimal accumulators: a plain
-        # long sum of 2^63-range hashes overflows under ANSI mode.
-        row = batch.select(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(key).cast("decimal(38,0)")).alias("s"),
-            F.sum(F.xxhash64(key, F.lit("\x02fp2")).cast("decimal(38,0)")).alias("s2"),
-        ).collect()[0]
-        return f"{row['n']}_{row['s']}_{row['s2']}"
-
     def _journal_fp(self, epoch_id: int) -> str | None:
         """The fingerprint of a fully-committed journal, else None."""
         d = self._delta_dir(epoch_id)
@@ -170,46 +155,21 @@ class StreamingValidator:
         report.write.mode("overwrite").parquet(vdir)
         # marker AFTER the parquet commit: a crash in between just makes
         # the next replay recompute into v=n+1 (wasted work, not a gap)
-        open(os.path.join(vdir, f"_epoch_{epoch_id}_{fp}"), "w").close()
+        _touch(os.path.join(vdir, f"_epoch_{epoch_id}_{fp}"))
         # the journal has served its purpose; without it a replay takes
         # the normal path, recomputes an empty delta, and no-ops
         shutil.rmtree(self._delta_dir(epoch_id), ignore_errors=True)
 
     def _on_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        applied = None
-        if not self.cdc:
-            # fold the content fingerprint into the delta computation
-            # (r06): an Observation on the RAW batch resolves on
-            # _compute_delta's own materialization, so the fingerprint
-            # stops being a separate batch-scan job.  The metrics sit
-            # below the dedup/anti-join, so they cover every raw row —
-            # exactly what _batch_fp computed.  (The cdc sink reads the
-            # batch twice in one plan — net-op groupBy + dedup join —
-            # where an observed node would double-count, so that path
-            # keeps the standalone fingerprint job.)  On an epoch
-            # replay the precomputed delta is simply discarded — the
-            # journal is authoritative there, and replays are rare.
-            from pyspark.sql import Observation
-
-            from shacl_spark.functions.terms import triple_id
-
-            obs = Observation()
-            key = triple_id()
-            observed = batch.observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.xxhash64(key).cast("decimal(38,0)")).alias("s"),
-                F.sum(F.xxhash64(key, F.lit("\x02fp2")).cast("decimal(38,0)")).alias("s2"),
-            )
-            applied = self.sink._compute_delta(observed)
-            got = obs.get
-            fp = f"{got['n']}_{got['s']}_{got['s2']}"
-        else:
-            fp = self._batch_fp(batch)
+        # the fingerprint is an Observation on the RAW batch, resolved
+        # by _compute_delta's own jobs; on an epoch replay the computed
+        # delta is discarded — the journal is authoritative there
+        obs = Observation()
+        applied = self.sink._compute_delta(batch.observe(obs, *fingerprint(batch)))
+        fp = "{n}_{s}_{s2}".format(**obs.get)
         # a committed journal is authoritative ONLY for the same batch
         # content: a restarted (checkpoint-less) stream reuses epoch
         # ids, and that collision must fall through to the normal path
-        six = [f.name for f in TRIPLE_SCHEMA.fields]
         if self._journal_fp(epoch_id) == fp:
             if self._report_marks_epoch(epoch_id, fp):
                 return  # target + report both committed for this batch
@@ -217,58 +177,36 @@ class StreamingValidator:
             # write: the journalled delta is authoritative; the edge
             # cache may predate the crash — drop it, rebuild next batch
             self._edges = None
-            if self.cdc:
-                journal = self.spark.read.parquet(self._delta_dir(epoch_id))
-                # re-appending (tid, seq, op) rows already present is
-                # idempotent under merge-on-read (equal-op seq ties)
-                self.sink._append(journal)
-                delta = journal.select(six)
-                triples = self.sink.current()
-            else:
-                delta = self.spark.read.schema(TRIPLE_SCHEMA).parquet(
-                    self._delta_dir(epoch_id)
-                )
-                remainder = self.sink._compute_delta(delta)
-                if not remainder.isEmpty():
-                    self.sink._append(remainder)
-                # a crash during the append's job commit can leave
-                # committed duplicates — collapse them before validating
-                triples = self.sink.current(dedup=True)
+            journal = self.spark.read.schema(_TARGET_SCHEMA).parquet(
+                self._delta_dir(epoch_id)
+            )
+            # re-appending (tid, seq, op) rows already present is
+            # idempotent under merge-on-read (equal-op seq ties)
+            self.sink._append(journal)
             report = incremental_revalidate(
                 self.spark,
-                triples,
-                delta,
+                self.sink.current(),
+                journal.select(TRIPLE_COLS),
                 self.shapes,
                 self.current_report(),
                 assume_distinct=True,
             )
             self._write_report(report, epoch_id, fp)
             return
-        if self.cdc:
-            applied, added, removed = self.sink._compute_delta(batch, epoch_id)
-            if applied.isEmpty():
-                return
-            delta = added.unionByName(removed)
-            journal = applied.drop("tid")
-        else:
-            # applied was computed above alongside the fingerprint
-            if applied.isEmpty():
-                return  # fully-duplicate batch (or completed epoch whose
-                #         journal was already pruned): report stands
-            delta = applied.drop("tid", "part")
-            journal = delta
+        if applied.isEmpty():
+            return  # no net change (or a completed epoch whose journal
+            #         was already pruned): the report stands
+        journal = applied.drop("tid")
         # durable journal FIRST: if the process dies after the target
         # append below, the replay still knows exactly what was applied;
         # the fingerprint file attributes it to THIS batch's content
         journal.write.mode("overwrite").parquet(self._delta_dir(epoch_id))
-        open(os.path.join(self._delta_dir(epoch_id), f"_fp_{fp}"), "w").close()
+        _touch(os.path.join(self._delta_dir(epoch_id), f"_fp_{fp}"))
         self.sink._append(applied)
-        cur = self.sink.current() if self.cdc else self.sink.current(dedup=False)
+        cur = self.sink.current()
         if self._edges is not None:
             # roll the cached adjacency forward to the post-append graph
             # (journal rows are the exact net delta; op '-' retracts)
-            from shacl_spark.shacl.incremental import shapes_footprint
-
             self._edges.apply_delta(journal, shapes_footprint(self.shapes))
             if self._edges.dirty or self._edges.n_rows > self._edge_cap:
                 self._edges = None
@@ -276,18 +214,15 @@ class StreamingValidator:
             # first batch: there is nothing to merge and the delta IS
             # the graph — a plain full validation gives the identical
             # report without paying affected-set analysis over every
-            # node (r04; matters when a stream starts from a bulk load)
+            # node (matters when a stream starts from a bulk load)
             from shacl_spark.shacl import validate
 
             report = validate(self.spark, cur, self.shapes, assume_distinct=True)
-            # warm the footprint-edge cache NOW (r06): the seed batch
-            # is the natural place to pay the one bounded edge collect,
-            # so the first CDC batch already runs in the steady state
-            # instead of collecting the full-graph adjacency cold
-            from shacl_spark.shacl.incremental import (
-                collect_local_edges,
-                shapes_footprint,
-            )
+            # warm the footprint-edge cache NOW: the seed batch is the
+            # natural place to pay the one bounded edge collect, so the
+            # first CDC batch already runs in the steady state instead
+            # of collecting the full-graph adjacency cold
+            from shacl_spark.shacl.incremental import collect_local_edges
 
             self._edges = collect_local_edges(
                 cur, shapes_footprint(self.shapes), self._edge_cap
@@ -296,11 +231,10 @@ class StreamingValidator:
             st: dict = {}
             report = incremental_revalidate(
                 self.spark,
-                # append-only target is per-batch deduped on triple
-                # identity (and the tombstone read is one-row-per-tid)
-                # — skip the defensive re-dedup scan
+                # the merge-on-read read is one row per tid — skip the
+                # defensive re-dedup scan
                 cur,
-                delta,
+                journal.select(TRIPLE_COLS),
                 self.shapes,
                 self.current_report(),
                 assume_distinct=True,
@@ -319,16 +253,15 @@ class StreamingValidator:
         trigger_available_now: bool = True,
         checkpoint_location: str | None = None,
     ):
-        """Attach to a streaming triple frame (canonical 6-column
-        schema).  Returns the StreamingQuery.  Pass
+        """Attach to a streaming triple frame (the triple columns,
+        optionally with ``op``).  Returns the StreamingQuery.  Pass
         ``checkpoint_location`` in production so restarts resume epoch
         numbering and skip already-seen input.  Correctness without a
         checkpoint: the content fingerprint keys journal replay to batch
         CONTENT (epoch-id collisions after a checkpoint-less restart
-        fall through to the normal path), and in CDC mode the tombstone
-        sink derives ``seq`` from the target itself — never from the
-        epoch id — so restarted epoch numbering cannot reorder merges
-        (ADVICE r04)."""
+        fall through to the normal path), and the sink derives ``seq``
+        from the target itself — never from the epoch id — so restarted
+        epoch numbering cannot reorder merges."""
         writer = stream.writeStream.foreachBatch(self._on_batch).outputMode("append")
         if checkpoint_location:
             writer = writer.option("checkpointLocation", checkpoint_location)

@@ -1,11 +1,14 @@
-"""spark-submit job smoke + streaming upsert sink."""
+"""spark-submit job smoke + the streaming upsert sink."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
+
+from shacl_spark.functions.terms import RDF, SH, XSD
 
 
 def test_build_kg_job_main(spark, tmp_path, capsys):
@@ -26,72 +29,70 @@ def test_build_kg_job_main(spark, tmp_path, capsys):
     assert metrics["triples_per_sec"] > 0
 
 
+def _rows(ids):
+    return [
+        (f"ex:s{i}", "ex:p", f"v{i}", "literal", None, None, None, None, None, None)
+        for i in ids
+    ]
+
+
 def test_streaming_triple_upsert(spark, tmp_path):
+    """A triple-column feed (no ``op``) is all upserts: a duplicate
+    within a batch and one across batches each land once."""
     from shacl_spark.functions.terms import TRIPLE_SCHEMA
-    from shacl_spark.streaming.upsert import TripleUpsertSink
+    from shacl_spark.streaming.upsert import TombstoneTripleSink
 
     src = str(tmp_path / "incoming")
     os.makedirs(src)
-    target = str(tmp_path / "triples_target")
+    sink = TombstoneTripleSink(spark, str(tmp_path / "triples_target"))
 
-    def rows(ids):
-        return [
-            (f"ex:s{i}", "ex:p", f"v{i}", "literal", None, None, None, None, None, None)
-            for i in ids
-        ]
+    def drain(name, ids):
+        path = os.path.join(src, name)
+        spark.createDataFrame(_rows(ids), TRIPLE_SCHEMA).write.parquet(path)
+        stream = spark.readStream.schema(TRIPLE_SCHEMA).parquet(path)
+        q = (
+            stream.writeStream.foreachBatch(lambda df, _epoch: sink._merge_batch(df))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
 
     # batch 1 with an internal duplicate; batch 2 overlapping batch 1
-    spark.createDataFrame(rows([1, 2, 2]), TRIPLE_SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(src, "b1")
-    )
-    sink = TripleUpsertSink(spark, target)
-    stream = (
-        spark.readStream.schema(TRIPLE_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src + "/b1")
-    )
-    q = sink.start(stream)
-    q.awaitTermination()
+    drain("b1", [1, 2, 2])
     assert sink.current().count() == 2
-
-    spark.createDataFrame(rows([2, 3]), TRIPLE_SCHEMA).write.mode("overwrite").parquet(
-        os.path.join(src, "b2")
-    )
-    stream2 = (
-        spark.readStream.schema(TRIPLE_SCHEMA).option("maxFilesPerTrigger", 1).parquet(src + "/b2")
-    )
-    q2 = sink.start(stream2)
-    q2.awaitTermination()
+    drain("b2", [2, 3])
     final = sink.current()
     assert final.count() == 3
     assert {r["subj"] for r in final.collect()} == {"ex:s1", "ex:s2", "ex:s3"}
+    # the target holds one '+' row per triple, no duplicate
+    assert spark.read.parquet(sink.target_dir).count() == 3
 
 
 def test_upsert_append_one_file_per_partition(spark, tmp_path):
-    """The append clusters the delta by target partition (r06): each
-    touched part= directory must receive ONE data file per batch, not
-    one per (task x partition) — tiny-file commits dominated
+    """Each touched part= directory receives ONE data file per batch,
+    not one per (task x partition) — tiny-file commits dominate
     small-batch appends."""
     from shacl_spark.functions.terms import TRIPLE_SCHEMA
-    from shacl_spark.streaming.upsert import TripleUpsertSink
+    from shacl_spark.streaming.upsert import TombstoneTripleSink
 
     target = str(tmp_path / "t")
-    rows = [
-        (f"ex:s{i}", "ex:p", f"v{i}", "literal", None, None, None, None, None, None)
-        for i in range(64)
-    ]
-    # a many-partition batch frame would previously fan out into many
-    # files per part= directory
-    batch = spark.createDataFrame(rows, TRIPLE_SCHEMA).repartition(8)
-    sink = TripleUpsertSink(spark, target, n_parts=4)
-    sink._merge_batch(batch, 0)
-    for d in os.listdir(target):
-        if not d.startswith("part="):
-            continue
-        files = [
-            f for f in os.listdir(os.path.join(target, d))
-            if f.endswith(".parquet")
-        ]
-        assert len(files) == 1, (d, files)
-    assert sink.current().count() == 64
+    # a many-partition batch frame could fan out into many files per
+    # part= directory
+    sink = TombstoneTripleSink(spark, target, n_parts=4)
+    # the first batch lands on an empty target, the second is merged
+    # against the live set
+    for n, ids in enumerate([range(64), range(48, 112)], start=1):
+        batch = spark.createDataFrame(_rows(ids), TRIPLE_SCHEMA).repartition(8)
+        sink._merge_batch(batch)
+        for d in os.listdir(target):
+            if not d.startswith("part="):
+                continue
+            files = [
+                f for f in os.listdir(os.path.join(target, d))
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == n, (d, files)
+    assert sink.current().count() == 112
 
 
 def test_fixture_export(tmp_path, monkeypatch):
@@ -116,18 +117,11 @@ def test_upsert_untouched_partitions_not_rewritten(spark, tmp_path):
     import hashlib
 
     from shacl_spark.functions.terms import TRIPLE_SCHEMA
-    from shacl_spark.streaming.upsert import TripleUpsertSink
+    from shacl_spark.streaming.upsert import TombstoneTripleSink
 
     target = str(tmp_path / "target")
-    sink = TripleUpsertSink(spark, target, n_parts=8)
-
-    def rows(ids):
-        return [
-            (f"ex:s{i}", "ex:p", f"v{i}", "literal", None, None, None, None, None, None)
-            for i in ids
-        ]
-
-    sink._merge_batch(spark.createDataFrame(rows(range(64)), TRIPLE_SCHEMA), 0)
+    sink = TombstoneTripleSink(spark, target, n_parts=8)
+    sink._merge_batch(spark.createDataFrame(_rows(range(64)), TRIPLE_SCHEMA))
 
     def file_hashes():
         out = {}
@@ -142,7 +136,7 @@ def test_upsert_untouched_partitions_not_rewritten(spark, tmp_path):
     assert len({os.path.dirname(p) for p in before}) == 8  # all partitions hit
 
     # one new row -> exactly one partition touched
-    sink._merge_batch(spark.createDataFrame(rows([1000]), TRIPLE_SCHEMA), 1)
+    sink._merge_batch(spark.createDataFrame(_rows([1000]), TRIPLE_SCHEMA))
     after = file_hashes()
     new_files = set(after) - set(before)
     touched_dirs = {os.path.dirname(p) for p in new_files}
@@ -152,5 +146,65 @@ def test_upsert_untouched_partitions_not_rewritten(spark, tmp_path):
     assert sink.current().count() == 65
 
     # idempotent replay of the same batch: nothing appended
-    sink._merge_batch(spark.createDataFrame(rows([1000]), TRIPLE_SCHEMA), 1)
-    assert sink.current(dedup=False).count() == 65
+    sink._merge_batch(spark.createDataFrame(_rows([1000]), TRIPLE_SCHEMA))
+    assert spark.read.parquet(target).count() == 65
+    assert file_hashes() == after
+
+
+SHAPES = [
+    ("ex:S", RDF + "type", SH + "NodeShape"),
+    ("ex:S", SH + "targetClass", "ex:Person"),
+    ("ex:S", SH + "property", "ex:SP"),
+    ("ex:SP", SH + "path", "ex:name"),
+    ("ex:SP", SH + "minCount", "1", "literal", XSD + "integer"),
+]
+
+
+@pytest.mark.parametrize("cdc", [False, True], ids=["adds", "cdc"])
+def test_validate_stream_job_main(spark, tmp_path, capsys, cdc):
+    """jobs/validate_stream.py on a triple-column feed and on a --cdc
+    feed whose second file retracts a name: the printed summary
+    matches a full validation of the live set."""
+    from jobs.validate_stream import main
+    from shacl_spark.functions.terms import TERM_COLS, triples_from_rows
+    from shacl_spark.shacl import summarize, validate
+
+    name_a = ("ex:a", "ex:name", "A", "literal", XSD + "string")
+    b1 = [
+        ("ex:a", RDF + "type", "ex:Person"),
+        name_a,
+        ("ex:b", RDF + "type", "ex:Person"),  # no name -> violation
+    ]
+    b2 = [("ex:c", RDF + "type", "ex:Person")]  # no name -> violation
+    retract = [name_a] if cdc else []
+
+    stream = tmp_path / "stream"
+    for name, rows, op in [("b1", b1, "+"), ("b2", b2, "+"), ("b3", retract, "-")]:
+        if not rows:
+            continue
+        df = triples_from_rows(spark, rows)
+        if cdc:
+            df = df.withColumn("op", F.lit(op))
+        df.coalesce(1).write.parquet(str(stream / name))
+    shapes = str(tmp_path / "shapes.parquet")
+    triples_from_rows(spark, SHAPES).select(TERM_COLS).write.parquet(shapes)
+
+    args = [
+        "--stream", str(stream / "*"), "--shapes", shapes,
+        "--target", str(tmp_path / "t"), "--report", str(tmp_path / "r"),
+        "--n-parts", "4",
+    ]
+    assert main(args + (["--cdc"] if cdc else [])) == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    live = [r for r in b1 + b2 if r not in retract]
+    full = validate(spark, triples_from_rows(spark, live), SHAPES)
+    by_comp: dict[str, int] = {}
+    for r in summarize(full).collect():
+        key = r["component"].split("#")[-1]
+        by_comp[key] = by_comp.get(key, 0) + r["n"]
+    assert out["violations_by_component"] == by_comp
+    assert by_comp == {"MinCountConstraintComponent": 3 if cdc else 2}
+    assert out["conforms"] is False
+    assert out["triples"] == len(live)
+    assert out["report_versions"] == (3 if cdc else 2)

@@ -6,11 +6,12 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
+import pytest
 
+import shacl_spark.streaming.validate_stream as vs_mod
 from shacl_spark.functions.terms import RDF, SH, TRIPLE_SCHEMA, XSD, triples_from_rows
 from shacl_spark.shacl import validate
-from shacl_spark.streaming.validate_stream import StreamingValidator
+from shacl_spark.streaming.validate_stream import StreamingValidator, fingerprint
 
 T = RDF + "type"
 INT = XSD + "integer"
@@ -97,8 +98,8 @@ def test_stream_validation_end_to_end(spark, tmp_path):
     }
 
     # replaying the whole stream (no checkpoint -> everything re-reads)
-    # must be a NO-OP: the upsert anti-joins every row away, no new
-    # report version appears
+    # must be a NO-OP: every row is already live, so the delta is
+    # empty and no new report version appears
     _run(spark, sv, stream_dir)
     assert len(sv._versions()) == 2
     assert sv.sink.current().count() == len(BATCH1) + len(BATCH2)
@@ -131,8 +132,6 @@ def test_edge_cache_steady_state(spark, tmp_path):
         modes.append(st.get("edge_mode"))
         return out
 
-    import shacl_spark.streaming.validate_stream as vs_mod
-
     vs_mod.incremental_revalidate, inc_mod.incremental_revalidate = spy, spy
     try:
         _run(spark, sv, stream_dir)
@@ -151,58 +150,120 @@ def _batch_df(spark, rows):
     return triples_from_rows(spark, rows).select(SIX)
 
 
-def test_crash_between_append_and_report(spark, tmp_path):
-    """ADVICE r03 (medium): a crash AFTER the target append but BEFORE
-    the report write must not leave the report permanently stale — the
-    journalled delta lets the epoch replay recompute it."""
+class _Crash(Exception):
+    pass
+
+
+def _raise(*_a, **_k):
+    raise _Crash()
+
+
+def _die_at_touch(prefix, after):
+    """A ``_touch`` that raises on the marker whose name starts with
+    ``prefix``: before creating it, or (``after``) once it exists."""
+    real = vs_mod._touch
+
+    def touch(path):
+        hit = os.path.basename(path).startswith(prefix)
+        if hit and not after:
+            raise _Crash(path)
+        real(path)
+        if hit:
+            raise _Crash(path)
+
+    return touch
+
+
+def _crash(name, m, sv):
+    """Make the program step that follows the named boundary raise."""
+    if name == "journal":  # the journal's _fp_ file is its commit
+        m.setattr(vs_mod, "_touch", _die_at_touch("_fp_", after=True))
+    elif name == "append":  # the step after the target append
+        m.setattr(sv.sink, "current", _raise)
+    elif name == "report":  # report parquet committed, no marker yet
+        m.setattr(vs_mod, "_touch", _die_at_touch("_epoch_", after=False))
+    else:  # "marker": marker written, journal not yet pruned
+        m.setattr(vs_mod, "_touch", _die_at_touch("_epoch_", after=True))
+
+
+# batch 2 adds BATCH2 and retracts a's name: a, c and rock end up
+# without a name (MinCount), and rock becomes the Person a knows
+CRASH_RETRACT = ("ex:a", "ex:name", "A", "literal", STR)
+CRASH_LIVE = [r for r in BATCH1 + BATCH2 if r != CRASH_RETRACT]
+
+
+@pytest.mark.parametrize("window", ["journal", "append", "report", "marker"])
+def test_crash_window_replay(spark, tmp_path, monkeypatch, window):
+    """A crash at each durable-write boundary of a batch that adds AND
+    retracts: the epoch replay yields the report of a full validation
+    of the live set and the right live count, and a second replay
+    adds no report version."""
     sv = StreamingValidator(
         spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
     )
-    sv._on_batch(_batch_df(spark, BATCH1), 0)
+    sv._on_batch(_op_batch(spark, [(r, "+") for r in BATCH1]), 0)
     assert len(sv._versions()) == 1
+    b2 = _op_batch(spark, [(r, "+") for r in BATCH2] + [(CRASH_RETRACT, "-")])
 
-    # simulate epoch 1 crashing between the two writes: journal + append
-    # happen, the report write does not
-    b2 = _batch_df(spark, BATCH2)
-    applied = sv.sink._compute_delta(b2)
-    applied.drop("tid", "part").write.mode("overwrite").parquet(sv._delta_dir(1))
-    open(os.path.join(sv._delta_dir(1), f"_fp_{sv._batch_fp(b2)}"), "w").close()
-    sv.sink._append(applied)
-    assert sv.sink.current().count() == len(BATCH1) + len(BATCH2)
-    assert len(sv._versions()) == 1  # report is behind the target
+    with monkeypatch.context() as m:
+        _crash(window, m, sv)
+        with pytest.raises(_Crash):
+            sv._on_batch(b2, 1)
+    # what the crash left behind
+    applied = window != "journal"
+    assert sv.sink.current().count() == len(CRASH_LIVE if applied else BATCH1)
+    reported = window in ("report", "marker")
+    assert len(sv._versions()) == (2 if reported else 1)
+    assert sv._journal_fp(1) is not None  # the journal is never pruned
 
-    # replay of epoch 1: were the delta recomputed from the target it
-    # would be EMPTY (rows already applied) and the report would stay
-    # stale forever; the journal recovery recomputes it instead
+    # the replay: without the journal its delta would be EMPTY (rows
+    # already applied) and the report would stay stale forever
     sv._on_batch(b2, 1)
-    full = validate(spark, triples_from_rows(spark, BATCH1 + BATCH2), SHAPES)
+    assert sv.sink.current().count() == len(CRASH_LIVE)
+    full = validate(spark, sv.sink.current(), SHAPES)
     assert _canon(sv.current_report()) == _canon(full)
+    expected = validate(spark, triples_from_rows(spark, CRASH_LIVE), SHAPES)
+    assert _canon(sv.current_report()) == _canon(expected)
+    assert {r["focus"] for r in sv.current_report().collect()} == {
+        "ex:a", "ex:c", "ex:rock"
+    }
 
-    # a second replay is a no-op (journal pruned, delta empty)
+    # a second replay is a no-op
     n = len(sv._versions())
     sv._on_batch(b2, 1)
     assert len(sv._versions()) == n
+    assert sv.sink.current().count() == len(CRASH_LIVE)
 
 
-def test_crash_between_journal_and_append(spark, tmp_path):
-    """Crash after the journal write but BEFORE the target append: the
-    replay must finish the append (idempotent remainder) and produce
-    the same report as an uninterrupted run."""
-    sv = StreamingValidator(
-        spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
+def test_fingerprint_is_one_rule(spark, tmp_path):
+    """The fingerprint _on_batch records (an Observation on the batch
+    feeding the delta job) equals a direct aggregate of the same
+    expressions on the raw batch — for a triple-column batch with an
+    in-batch duplicate and an op batch with a same-batch +/- pair, each
+    on an empty and on a non-empty target."""
+    dup = triples_from_rows(spark, BATCH2 + BATCH2[:1]).select(SIX)
+    pair = _op_batch(
+        spark, [(r, "+") for r in BATCH2] + [(BATCH2[0], "-")]
     )
-    sv._on_batch(_batch_df(spark, BATCH1), 0)
-
-    b2 = _batch_df(spark, BATCH2)
-    applied = sv.sink._compute_delta(b2)
-    applied.drop("tid", "part").write.mode("overwrite").parquet(sv._delta_dir(1))
-    open(os.path.join(sv._delta_dir(1), f"_fp_{sv._batch_fp(b2)}"), "w").close()
-    # crash: no append, no report
-
-    sv._on_batch(b2, 1)
-    assert sv.sink.current().count() == len(BATCH1) + len(BATCH2)
-    full = validate(spark, triples_from_rows(spark, BATCH1 + BATCH2), SHAPES)
-    assert _canon(sv.current_report()) == _canon(full)
+    for name, batch in [("dup", dup), ("pair", pair)]:
+        for seeded in (False, True):
+            root = tmp_path / f"{name}_{seeded}"
+            sv = StreamingValidator(
+                spark, SHAPES, str(root / "t"), str(root / "r"), n_parts=4
+            )
+            if seeded:
+                sv._on_batch(_batch_df(spark, BATCH1), 0)
+            row = batch.select(*fingerprint(batch)).collect()[0]
+            direct = f"{row['n']}_{row['s']}_{row['s2']}"
+            sv._on_batch(batch, 1)
+            marks = {
+                f
+                for v in sv._versions()
+                for f in os.listdir(os.path.join(sv.report_dir, f"v={v}"))
+                if f.startswith("_epoch_1_")
+            }
+            assert marks == {f"_epoch_1_{direct}"}, (name, seeded)
+            assert row["n"] == (len(BATCH2) + 1)
 
 
 def test_restarted_stream_epoch_id_collision(spark, tmp_path):
@@ -218,8 +279,6 @@ def test_restarted_stream_epoch_id_collision(spark, tmp_path):
 
     # leave a stale committed journal for epoch 0 (crash before report,
     # journal never pruned), then "restart": DIFFERENT data as epoch 0
-    b1 = _batch_df(spark, BATCH1)
-    applied = sv.sink._compute_delta(b1)  # empty — batch already merged
     stale = _batch_df(spark, BATCH1)
     stale.limit(1).write.mode("overwrite").parquet(sv._delta_dir(0))
     open(os.path.join(sv._delta_dir(0), "_fp_STALE"), "w").close()
@@ -262,13 +321,13 @@ def test_tombstone_sink_merge_on_read(spark, tmp_path):
     t3 = ("ex:c", "ex:p", "3", "literal", XSD + "string")
 
     ch1 = sink._merge_batch(_op_batch(spark, [(t1, "+"), (t2, "+"),
-                                              (t3, "+"), (t3, "-")]), 0)
+                                              (t3, "+"), (t3, "-")]))
     assert ch1.count() == 2  # t3 nets to '-' on an empty target: no-op
     live = {r["subj"] for r in sink.current().collect()}
     assert live == {"ex:a", "ex:b"}
 
     ch2 = sink._merge_batch(_op_batch(spark, [(t1, "-"), (t3, "+"),
-                                              (t2, "+")]), 1)
+                                              (t2, "+")]))
     # t1 removed (was live), t3 added, t2 already live -> no-op
     assert {(r["subj"]) for r in ch2.collect()} == {"ex:a", "ex:c"}
     assert {r["subj"] for r in sink.current().collect()} == {"ex:b", "ex:c"}
@@ -276,14 +335,14 @@ def test_tombstone_sink_merge_on_read(spark, tmp_path):
     # epoch replay: same batch, same seq -> merge computes an empty
     # net delta (t1 already dead, t3 already live, t2 live)
     ch2b = sink._merge_batch(_op_batch(spark, [(t1, "-"), (t3, "+"),
-                                               (t2, "+")]), 1)
+                                               (t2, "+")]))
     assert ch2b.isEmpty()
     assert {r["subj"] for r in sink.current().collect()} == {"ex:b", "ex:c"}
 
     sink.compact()
     assert {r["subj"] for r in sink.current().collect()} == {"ex:b", "ex:c"}
     # re-add after a compacted delete works
-    sink._merge_batch(_op_batch(spark, [(t1, "+")]), 2)
+    sink._merge_batch(_op_batch(spark, [(t1, "+")]))
     assert {r["subj"] for r in sink.current().collect()} == {"ex:a", "ex:b", "ex:c"}
 
 
@@ -293,7 +352,7 @@ def test_cdc_stream_validation_with_deletes(spark, tmp_path):
     report equals full validation of the live set."""
     sv = StreamingValidator(
         spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"),
-        n_parts=4, cdc=True,
+        n_parts=4,
     )
     base = [
         (("ex:a", RDF + "type", "ex:Person"), "+"),
@@ -326,39 +385,42 @@ def test_cdc_stream_validation_with_deletes(spark, tmp_path):
 
 
 def test_cdc_restart_epoch_renumbering_tombstone_wins(spark, tmp_path):
-    """ADVICE r04 (medium): seq must come from the TARGET, not the epoch
-    id.  A checkpoint-less restart renumbers epochs from 0; a tombstone
-    arriving as 'epoch 0' after an add written at a higher epoch must
-    still win the merge-on-read window."""
+    """seq must come from the TARGET, not the epoch id: a
+    checkpoint-less restart renumbers epochs from 0.  The sink takes no
+    epoch id at all, so a fresh sink over the same target continues
+    its seq, and a tombstone merged after the restart wins the
+    merge-on-read window over the earlier add."""
     from shacl_spark.streaming.upsert import TombstoneTripleSink
 
     t1 = ("ex:a", "ex:p", "1", "literal", XSD + "string")
     t2 = ("ex:b", "ex:p", "2", "literal", XSD + "string")
 
     sink = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
-    sink._merge_batch(_op_batch(spark, [(t1, "+")]), 5)
-    sink._merge_batch(_op_batch(spark, [(t2, "+")]), 6)
+    sink._merge_batch(_op_batch(spark, [(t1, "+")]))
+    sink._merge_batch(_op_batch(spark, [(t2, "+")]))
     assert {r["subj"] for r in sink.current().collect()} == {"ex:a", "ex:b"}
 
     # "restart": a fresh sink on the same target, epochs from 0 again
     sink2 = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
-    ch = sink2._merge_batch(_op_batch(spark, [(t1, "-")]), 0)
+    ch = sink2._merge_batch(_op_batch(spark, [(t1, "-")]))
     assert {r["subj"] for r in ch.collect()} == {"ex:a"}  # delta reported
     assert {r["subj"] for r in sink2.current().collect()} == {"ex:b"}
+    seq = {(r["subj"], r["op"]): r["seq"] for r in spark.read.parquet(sink.target_dir).collect()}
+    assert seq[("ex:a", "-")] > seq[("ex:a", "+")]
 
     # and a re-add after the restart-delete also wins
     sink3 = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
-    sink3._merge_batch(_op_batch(spark, [(t1, "+")]), 0)
+    sink3._merge_batch(_op_batch(spark, [(t1, "+")]))
     assert {r["subj"] for r in sink3.current().collect()} == {"ex:a", "ex:b"}
 
 
 def test_cdc_stream_restart_epoch_collision(spark, tmp_path):
-    """End-to-end CDC twin of the non-CDC restart test: a restarted
+    """End-to-end op-feed twin of the restart test above: a restarted
     stream reusing epoch 0 for a RETRACTION must apply it and keep the
     report equal to full validation of the live set."""
     sv = StreamingValidator(
         spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"),
-        n_parts=4, cdc=True,
+        n_parts=4,
     )
     base = [
         (("ex:a", RDF + "type", "ex:Person"), "+"),
@@ -371,7 +433,7 @@ def test_cdc_stream_restart_epoch_collision(spark, tmp_path):
     # restart: fresh validator over the same dirs, epoch ids from 0
     sv2 = StreamingValidator(
         spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"),
-        n_parts=4, cdc=True,
+        n_parts=4,
     )
     sv2._on_batch(_op_batch(spark, [(("ex:a", "ex:knows", "ex:rock"), "-")]), 0)
     assert {r["subj"] for r in sv2.sink.current().collect()} == {"ex:a"}
