@@ -9,9 +9,10 @@
         [--cdc]      # the feed's files carry an 'op' column ('+' / '-')
         [--follow]   # keep running; default drains available input and exits
 
-Each micro-batch upserts and retracts (exactly-once, partition-pruned;
-a feed without ``--cdc`` is all upserts), incrementally revalidates
-only the affected focus nodes, and writes a new report version.
+Each micro-batch upserts and retracts (exactly-once, reading only the
+touched hash keys; a feed without ``--cdc`` is all upserts),
+incrementally revalidates only the affected focus nodes, and writes a
+new report version.
 Prints a one-line JSON summary of the final report.
 """
 

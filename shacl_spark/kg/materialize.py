@@ -10,11 +10,15 @@ The edge table is written first; the node table is derived from the
 written edge table, so the frame handed to ``write_graph`` is computed
 once.  Writes are range-partitioned on the key (A16), so each file
 holds a disjoint key range and downstream scans can prune files.
-File-count rule: one file per ``FILE_BYTES`` of the files the input
-frame scans (at least one).  A single file needs no range-boundary
-sampling job.  A frame with no file scan under it (a build without the
-checkpoint, whose canonical input is a local checkpoint) has no known
-size and keeps one file per core, at least ``UNSIZED_FILES``.
+A single file needs no range-boundary sampling job.
+
+:func:`file_count` is the one file-count rule of every table this
+package writes (the edge and node tables here, the stream sink's batch
+and compaction directories and its report versions): one file per
+``FILE_BYTES`` of the files the written frame scans (at least one).  A
+frame with no file scan under it (a build without the checkpoint, whose
+canonical input is a local checkpoint) has no known size and keeps one
+file per core, at least ``UNSIZED_FILES``.
 """
 
 from __future__ import annotations
@@ -61,14 +65,19 @@ def read_edges(triples: DataFrame, out_dir: str) -> DataFrame:
     )
 
 
-def _write_table(df: DataFrame, key: str, path: str) -> int:
-    """Range-partition ``df`` on ``key`` into files sized by the
-    file-count rule; returns the row count, observed during the write."""
+def file_count(df: DataFrame) -> int:
+    """How many files a write of ``df`` gets (the rule in the module
+    docstring); needs no Spark job."""
     n_bytes = input_bytes(df)
     if n_bytes:
-        n_files = math.ceil(n_bytes / FILE_BYTES)
-    else:
-        n_files = max(df.sparkSession.sparkContext.defaultParallelism, UNSIZED_FILES)
+        return math.ceil(n_bytes / FILE_BYTES)
+    return max(df.sparkSession.sparkContext.defaultParallelism, UNSIZED_FILES)
+
+
+def _write_table(df: DataFrame, key: str, path: str) -> int:
+    """Range-partition ``df`` on ``key`` into :func:`file_count` files;
+    returns the row count, observed during the write."""
+    n_files = file_count(df)
     # observe ABOVE the range exchange: repartitionByRange makes a
     # sampling pass over its child to pick boundaries, which would run a
     # child-side CollectMetrics twice and double the counts

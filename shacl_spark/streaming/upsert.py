@@ -5,38 +5,54 @@ Without a Delta/Iceberg MERGE target in this container, the upsert is
 emulated scale-correctly.  Each batch row carries an ``op`` column
 (``'+'`` upsert / ``'-'`` delete); a batch without one is all ``'+'``,
 so an adds-only feed is a CDC feed with no retractions.  The target is
-APPEND-ONLY and hash-partitioned on the triple identity
-(``part=pmod(xxhash64(tid), n_parts)``): every accepted change is
-written as ``(triple, op, seq)`` and :meth:`TombstoneTripleSink.current`
-reconstructs the live set by keeping the highest-``seq`` op per triple
-identity and filtering to ``'+'`` — the merge-on-read shape
-(Hudi/Iceberg MOR); on a real table a background compaction folds
-tombstones, here :meth:`TombstoneTripleSink.compact` does.
+APPEND-ONLY: every accepted change is written as ``(triple, op, seq,
+part)`` and :meth:`TombstoneTripleSink.current` reconstructs the live
+set by keeping the highest-``seq`` op per triple identity and filtering
+to ``'+'`` — the merge-on-read shape (Hudi/Iceberg MOR).
+
+Layout: each committed batch is one directory ``seq=<n>`` holding one
+file set, and ``seq`` in its rows is ``n``.  The file count is
+:func:`~shacl_spark.kg.materialize.file_count` of the written frame,
+applied through a ``coalesce`` (no shuffle).  ``part =
+pmod(xxhash64(tid), n_parts)`` is a data column and every file is
+sorted on it, so a ``part IN touched`` read skips files and row groups
+by their parquet min/max statistics.  Reads list the directories and
+see only those holding ``_SUCCESS``; the next ``seq`` is the newest
+committed one plus one, from the same listing (no Spark job).  A write
+that dies before its commit leaves a directory without ``_SUCCESS``,
+which reads ignore and the next append at that ``seq`` overwrites.
 
 Each micro-batch
 
 1. nets itself per ``tid`` (``'-'`` wins a same-batch ``+``/``-``
    pair: the net effect of add+retract is absence),
-2. reads ONLY the touched partitions of the target (partition pruning:
-   the scan reads just those directories) to find which triples are
-   live and the next ``seq``, and
-3. APPENDS the rows that change the live set through Spark's
-   file-commit protocol.
+2. reads the touched ``part`` values of the target to find which
+   triples are live, and
+3. APPENDS the rows that change the live set as a new directory.
 
-This is O(|batch| + |touched partitions|) per batch — not O(|target|)
-— and there is no delete/rename swap window: a crash mid-write leaves
-only uncommitted ``_temporary`` files, which parquet reads ignore.  The
-one non-atomic edge is a crash DURING job commit (some task files
-renamed, some not); a replay then re-appends rows whose files already
-committed, which are equal ``(tid, seq, op)`` duplicates that the
-window in :meth:`TombstoneTripleSink._latest` collapses.  On a cluster
-with Delta/Iceberg the append becomes a single MERGE INTO; the
-streaming scaffolding is unchanged.
+This is O(|batch| + |touched rows' files|) per batch — not O(|target|)
+— and there is no delete/rename swap window.  A replay that re-appends
+rows already committed writes equal-op duplicates at a higher ``seq``;
+the window in :meth:`TombstoneTripleSink._latest` collapses them.
+
+Compaction (:meth:`TombstoneTripleSink.compact`, run by the validator
+when :meth:`TombstoneTripleSink.compaction_due`): once the directories
+newer than the oldest one hold as many bytes as the oldest one, the
+live rows are written as a new directory at the next ``seq``, and only
+after that commit are the older directories deleted, oldest first, each
+by removing its ``_SUCCESS`` before its files.  At every crash point the
+newest row of each triple identity is in the new base or in a surviving
+newer directory, so reads stay exact.  The rewrite is geometric: its
+amortized cost is O(1) per appended byte, stored bytes stay O(live),
+and the ``current()`` window covers the live set plus recent batches,
+not the history.  On a cluster with Delta/Iceberg the append becomes a
+single MERGE INTO; the streaming scaffolding is unchanged.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,6 +60,7 @@ from pyspark.sql import types as T
 from pyspark.sql import Window as W
 
 from shacl_spark.functions.terms import TRIPLE_COLS, TRIPLE_SCHEMA, triple_id
+from shacl_spark.kg.materialize import file_count
 
 # the target's (and the journal's) layout, given to every read so that
 # no read pays a schema-inference job
@@ -62,30 +79,53 @@ def batch_op(batch: DataFrame) -> Column:
     return F.col("op") if "op" in batch.columns else F.lit("+")
 
 
+def _drop(path: str) -> None:
+    """Delete a committed directory: its ``_SUCCESS`` first, so a crash
+    part-way leaves a directory that reads ignore."""
+    os.remove(os.path.join(path, "_SUCCESS"))
+    shutil.rmtree(path)
+
+
+def _bytes(path: str) -> int:
+    return sum(e.stat().st_size for e in os.scandir(path) if e.is_file())
+
+
 class TombstoneTripleSink:
     def __init__(self, spark: SparkSession, target_dir: str, n_parts: int = 16):
-        """``n_parts`` fixes the target's hash-partition count — pick
-        ~(total size / healthy file size) at deployment scale; it must
-        stay constant for the lifetime of a target directory."""
+        """``n_parts`` fixes the hash-key range of the ``part`` column —
+        pick ~(total size / healthy row-group size) at deployment scale;
+        it must stay constant for the lifetime of a target directory."""
         self.spark = spark
         self.target_dir = target_dir
         self.n_parts = n_parts
 
-    def _read_target(self) -> DataFrame | None:
+    def _committed(self) -> list[tuple[int, str]]:
+        """``(seq, directory)`` of every committed batch, oldest first."""
         if not os.path.isdir(self.target_dir):
+            return []
+        return sorted(
+            (int(d[4:]), os.path.join(self.target_dir, d))
+            for d in os.listdir(self.target_dir)
+            if d.startswith("seq=")
+            and os.path.isfile(os.path.join(self.target_dir, d, "_SUCCESS"))
+        )
+
+    def _next_seq(self) -> int:
+        committed = self._committed()
+        return committed[-1][0] + 1 if committed else 1
+
+    def _read(self, committed: list[tuple[int, str]]) -> DataFrame | None:
+        if not committed:
             return None
-        if not any(f.startswith("part=") for f in os.listdir(self.target_dir)):
-            return None
-        return self.spark.read.schema(_TARGET_SCHEMA).parquet(self.target_dir)
+        return self.spark.read.schema(_TARGET_SCHEMA).parquet(*[d for _, d in committed])
 
     @staticmethod
     def _latest(df: DataFrame) -> DataFrame:
-        """Keep the highest-seq row per triple identity; op DESC on seq
-        ties so ``'-'`` wins ('-' > '+' in ASCII — a crash-replayed
-        append only ever duplicates (tid, seq) with the SAME op, so
-        ties are equal-op duplicates or a same-batch +/- pair)."""
+        """Keep the highest-seq row per triple identity (a directory
+        holds one row per tid and has its own seq, so there are no
+        ties)."""
         df = df.withColumn("tid", triple_id())
-        w = W.partitionBy("tid").orderBy(F.desc("seq"), F.desc("op"))
+        w = W.partitionBy("tid").orderBy(F.desc("seq"))
         return (
             df.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
@@ -94,7 +134,7 @@ class TombstoneTripleSink:
 
     def current(self) -> DataFrame:
         """The live triple set (triple columns only)."""
-        existing = self._read_target()
+        existing = self._read(self._committed())
         if existing is None:
             return self.spark.createDataFrame([], TRIPLE_SCHEMA)
         return self._latest(existing).where(F.col("op") == "+").select(TRIPLE_COLS)
@@ -112,16 +152,14 @@ class TombstoneTripleSink:
         one of its rows (all equal but lineage) and the net op, ``'-'``
         winning (max in ASCII).
 
-        ``seq`` is derived from the TARGET (max existing seq over the
-        touched partitions + 1), never from an epoch id: a stream
-        restarted without a checkpoint location renumbers epochs from
-        0, and an epoch-derived seq would let an old row outrank a
-        newer tombstone in :meth:`_latest`.  Per-tid ordering only needs
-        the max over the tid's own partition (a tid hashes to exactly
-        one partition), so the pruned scan below is sufficient AND
-        O(touched), not O(target).  Crash-replay safety: the journal
-        persists the assigned seq, so a replay re-appends identical
-        (tid, seq, op) rows (idempotent ties)."""
+        ``seq`` is the next committed directory's number, from the
+        target's listing, never from an epoch id: a stream restarted
+        without a checkpoint location renumbers epochs from 0, and an
+        epoch-derived seq would let an old row outrank a newer
+        tombstone in :meth:`_latest`.  Whether a tid is live only needs
+        the rows of its own ``part`` value (a tid has exactly one), so
+        the read below filters to the touched values and is
+        O(touched), not O(target)."""
         rows = (
             batch.withColumn("tid", triple_id())
             .groupBy("tid")
@@ -131,15 +169,13 @@ class TombstoneTripleSink:
             )
             .withColumn("part", F.pmod(F.xxhash64("tid"), F.lit(self.n_parts)).cast("int"))
         )
-        existing = self._read_target()
+        existing = self._read(self._committed())
         if existing is None:
-            applied, next_seq = rows.where(F.col("op") == "+"), 1
+            applied = rows.where(F.col("op") == "+")
         else:
             touched = [r["part"] for r in rows.select("part").distinct().collect()]
-            pruned = existing.where(F.col("part").isin(touched)) if touched else existing.limit(0)
-            pruned = pruned.localCheckpoint(eager=False)
             live = (
-                self._latest(pruned)
+                self._latest(existing.where(F.col("part").isin(touched)))
                 .where(F.col("op") == "+")
                 .select("tid", F.lit(True).alias("__live"))
             )
@@ -150,42 +186,50 @@ class TombstoneTripleSink:
                 .where((F.col("op") == "+") == F.col("__live").isNull())
                 .drop("__live")
             )
-            max_seq = pruned.agg(F.max("seq")).collect()[0][0]
-            next_seq = (max_seq or 0) + 1
-        return applied.withColumn("seq", F.lit(next_seq).cast("long")).localCheckpoint(
+        return applied.withColumn("seq", F.lit(self._next_seq()).cast("long")).localCheckpoint(
             eager=True
         )
 
-    def _append(self, applied: DataFrame) -> None:
-        """Append a precomputed delta (from :meth:`_compute_delta`, or
-        its journal) through the file-commit protocol."""
+    def _append(self, rows: DataFrame) -> None:
+        """Commit ``rows`` (a delta from :meth:`_compute_delta` or its
+        journal, or the live set) as the next ``seq=<n>`` directory:
+        :func:`file_count` files of ``rows``, each sorted on ``part``;
+        ``seq`` is set to ``n``.  Overwrite clears what an uncommitted
+        write at ``n`` left behind."""
+        seq = self._next_seq()
         (
-            applied.drop("tid")
-            .write.mode("append")
-            .partitionBy("part")
-            .parquet(self.target_dir)
+            rows.drop("tid")
+            .withColumn("seq", F.lit(seq).cast("long"))
+            .coalesce(file_count(rows))
+            .sortWithinPartitions("part")
+            .write.mode("overwrite")
+            .parquet(os.path.join(self.target_dir, f"seq={seq}"))
         )
 
     def _merge_batch(self, batch: DataFrame) -> DataFrame:
         """Merge one micro-batch; returns the NET change rows (triple
-        columns; additions and removals)."""
+        columns; additions and removals).  A batch with no net change
+        commits no directory."""
         applied = self._compute_delta(batch)
-        self._append(applied)
+        if not applied.isEmpty():
+            self._append(applied)
         return applied.select(TRIPLE_COLS)
 
+    def compaction_due(self) -> bool:
+        """The geometric rule: the committed directories newer than the
+        oldest one hold at least as many bytes as the oldest one."""
+        sizes = [_bytes(d) for _, d in self._committed()]
+        return len(sizes) > 1 and sum(sizes[1:]) >= sizes[0]
+
     def compact(self) -> None:
-        """Fold tombstones: rewrite the target to only the live rows
-        (the background-compaction step a MOR table runs; after it the
-        read-side window is over singleton groups)."""
-        existing = self._read_target()
+        """Fold tombstones: commit the live rows as the next directory,
+        then delete every older one, oldest first (the background
+        compaction a MOR table runs; the crash order is in the module
+        docstring)."""
+        old = self._committed()
+        existing = self._read(old)
         if existing is None:
             return
-        live = self._latest(existing).where(F.col("op") == "+").localCheckpoint(
-            eager=True
-        )
-        import shutil as _shutil
-
-        _shutil.rmtree(self.target_dir, ignore_errors=True)
-        live.drop("tid").write.mode("overwrite").partitionBy("part").parquet(
-            self.target_dir
-        )
+        self._append(self._latest(existing).where(F.col("op") == "+"))
+        for _, d in old:
+            _drop(d)

@@ -7,30 +7,45 @@ means all ``'+'``):
 
 1. computes its net change against the merge-on-read triple target
    (:class:`~shacl_spark.streaming.upsert.TombstoneTripleSink` —
-   O(batch + touched partitions)) and, from an Observation on the same
+   O(batch + touched rows' files)) and, from an Observation on the same
    job, a content fingerprint of the raw batch,
 2. journals that change durably (``report_dir/_delta/epoch=<id>``,
-   with an ``_fp_<fingerprint>`` file) and then appends it to the
-   target,
+   with an ``_fp_<fingerprint>`` file) and then appends the journal's
+   files to the target as its next committed ``seq=<n>`` directory,
+   sized from their bytes,
 3. incrementally revalidates only the focus nodes the change can
    affect (shacl/incremental.py — additions and retractions both seed
    it; work scales with |delta|, not |graph|),
-4. persists the merged report under a new version directory
-   (``report_dir/v=<n>``) with an ``_epoch_<id>_<fingerprint>`` marker,
-   then prunes the journal.  Versions are append-only, so reading the
-   previous report and writing the next one never self-overwrites, and
-   a crash mid-write leaves the previous version intact.
+4. persists the merged report as one file set under a new version
+   directory (``report_dir/v=<n>``, its file count from
+   :func:`~shacl_spark.kg.materialize.file_count`) with an
+   ``_epoch_<id>_<fingerprint>`` marker, then prunes the journal.
+   Versions are append-only and all are kept, so reading the previous
+   report and writing the next one never self-overwrites, and a crash
+   mid-write leaves the previous version intact.
+
+Between batches — at the start of a batch, once the previous one fully
+committed — the target is compacted when the sink's geometric rule says
+so (:meth:`~shacl_spark.streaming.upsert.TombstoneTripleSink.
+compaction_due`: the newer directories outgrew the oldest one).  The
+live set is committed as a new directory before any older one is
+deleted, oldest first, so a crash at any step of it leaves reads exact,
+and a later compaction redoes an interrupted one.  Compaction keeps the
+live set as it is, so a replay's journal and report logic hold across
+it.  It never runs after a run's last batch, where stopping the query
+would cancel it half-way.
 
 An epoch replay with a committed journal of the same fingerprint tells
 the crash windows apart:
 
 - marked report present → the batch fully committed (the crash hit
-  after the marker, before the prune): no-op;
+  after the marker): prune the journal;
 - no marked report → the crash hit after the journal commit, after the
   target append, or after the report's parquet commit but before its
-  marker: re-append the journal (equal ``(tid, seq, op)`` rows are
-  idempotent under merge-on-read) and recompute the report from the
-  JOURNAL's delta into the next version.
+  marker: re-append the journal (rows already committed come back as
+  equal-op duplicates at a higher ``seq``, which merge-on-read
+  collapses) and recompute the report from the JOURNAL's delta into
+  the next version.
 
 Without a matching journal a replay takes the normal path, whose delta
 is empty once the batch is applied.  The fingerprint, not the epoch id,
@@ -48,6 +63,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from shacl_spark.functions.terms import TRIPLE_COLS, triple_id
+from shacl_spark.kg.materialize import file_count
 from shacl_spark.shacl.engine import REPORT_OUT_SCHEMA
 from shacl_spark.shacl.incremental import incremental_revalidate, shapes_footprint
 from shacl_spark.shacl.parser import parse_shapes_graph
@@ -149,18 +165,23 @@ class StreamingValidator:
             for v in self._versions()
         )
 
+    def _journal(self, epoch_id: int) -> DataFrame:
+        return self.spark.read.schema(_TARGET_SCHEMA).parquet(self._delta_dir(epoch_id))
+
     def _write_report(self, report: DataFrame, epoch_id: int, fp: str) -> None:
         nxt = (self._versions() or [0])[-1] + 1
         vdir = os.path.join(self.report_dir, f"v={nxt}")
-        report.write.mode("overwrite").parquet(vdir)
+        report.coalesce(file_count(report)).write.mode("overwrite").parquet(vdir)
         # marker AFTER the parquet commit: a crash in between just makes
         # the next replay recompute into v=n+1 (wasted work, not a gap)
         _touch(os.path.join(vdir, f"_epoch_{epoch_id}_{fp}"))
-        # the journal has served its purpose; without it a replay takes
-        # the normal path, recomputes an empty delta, and no-ops
-        shutil.rmtree(self._delta_dir(epoch_id), ignore_errors=True)
 
     def _on_batch(self, batch: DataFrame, epoch_id: int) -> None:
+        # compaction runs between batches, once the previous one fully
+        # committed, and before this one computes its delta; never after
+        # a run's last batch, where stopping the query would cancel it
+        if self.sink.compaction_due():
+            self.sink.compact()
         # the fingerprint is an Observation on the RAW batch, resolved
         # by _compute_delta's own jobs; on an epoch replay the computed
         # delta is discarded — the journal is authoritative there
@@ -171,43 +192,41 @@ class StreamingValidator:
         # content: a restarted (checkpoint-less) stream reuses epoch
         # ids, and that collision must fall through to the normal path
         if self._journal_fp(epoch_id) == fp:
-            if self._report_marks_epoch(epoch_id, fp):
-                return  # target + report both committed for this batch
-            # crash landed between the journal write and the report
-            # write: the journalled delta is authoritative; the edge
-            # cache may predate the crash — drop it, rebuild next batch
-            self._edges = None
-            journal = self.spark.read.schema(_TARGET_SCHEMA).parquet(
-                self._delta_dir(epoch_id)
-            )
-            # re-appending (tid, seq, op) rows already present is
-            # idempotent under merge-on-read (equal-op seq ties)
-            self.sink._append(journal)
-            report = incremental_revalidate(
-                self.spark,
-                self.sink.current(),
-                journal.select(TRIPLE_COLS),
-                self.shapes,
-                self.current_report(),
-                assume_distinct=True,
-            )
-            self._write_report(report, epoch_id, fp)
-            return
-        if applied.isEmpty():
+            if not self._report_marks_epoch(epoch_id, fp):
+                # the crash landed between the journal write and the
+                # report's marker: the edge cache may predate it — drop
+                # it, the incremental pass collects a fresh one
+                self._edges = None
+                self._apply(self._journal(epoch_id), epoch_id, fp)
+            # else target + report both committed; only the prune may
+            # be missing
+        elif applied.isEmpty():
             return  # no net change (or a completed epoch whose journal
             #         was already pruned): the report stands
-        journal = applied.drop("tid")
-        # durable journal FIRST: if the process dies after the target
-        # append below, the replay still knows exactly what was applied;
-        # the fingerprint file attributes it to THIS batch's content
-        journal.write.mode("overwrite").parquet(self._delta_dir(epoch_id))
-        _touch(os.path.join(self._delta_dir(epoch_id), f"_fp_{fp}"))
-        self.sink._append(applied)
+        else:
+            journal = applied.drop("tid")
+            # durable journal FIRST: if the process dies after the target
+            # append, the replay still knows exactly what was applied;
+            # the fingerprint file attributes it to THIS batch's content
+            journal.write.mode("overwrite").parquet(self._delta_dir(epoch_id))
+            _touch(os.path.join(self._delta_dir(epoch_id), f"_fp_{fp}"))
+            self._apply(journal, epoch_id, fp)
+        # the batch is committed: without the journal a replay takes the
+        # normal path, recomputes an empty delta, and no-ops
+        shutil.rmtree(self._delta_dir(epoch_id), ignore_errors=True)
+
+    def _apply(self, delta: DataFrame, epoch_id: int, fp: str) -> None:
+        """Append the journalled ``delta`` to the target, revalidate,
+        and write the marked report version.  The append reads the
+        journal's files, so its file count comes from their bytes; a
+        replay re-appends rows that may already be committed, which is
+        idempotent under merge-on-read."""
+        self.sink._append(self._journal(epoch_id))
         cur = self.sink.current()
         if self._edges is not None:
             # roll the cached adjacency forward to the post-append graph
             # (journal rows are the exact net delta; op '-' retracts)
-            self._edges.apply_delta(journal, shapes_footprint(self.shapes))
+            self._edges.apply_delta(delta, shapes_footprint(self.shapes))
             if self._edges.dirty or self._edges.n_rows > self._edge_cap:
                 self._edges = None
         if not self._versions():
@@ -234,7 +253,7 @@ class StreamingValidator:
                 # the merge-on-read read is one row per tid — skip the
                 # defensive re-dedup scan
                 cur,
-                journal.select(TRIPLE_COLS),
+                delta.select(TRIPLE_COLS),
                 self.shapes,
                 self.current_report(),
                 assume_distinct=True,

@@ -68,31 +68,61 @@ def test_streaming_triple_upsert(spark, tmp_path):
     assert spark.read.parquet(sink.target_dir).count() == 3
 
 
-def test_upsert_append_one_file_per_partition(spark, tmp_path):
-    """Each touched part= directory receives ONE data file per batch,
-    not one per (task x partition) — tiny-file commits dominate
-    small-batch appends."""
-    from shacl_spark.functions.terms import TRIPLE_SCHEMA
-    from shacl_spark.streaming.upsert import TombstoneTripleSink
+def _committed_files(target):
+    """{committed seq=<n> directory: its parquet files}."""
+    return {
+        d: sorted(f for f in os.listdir(os.path.join(target, d)) if f.endswith(".parquet"))
+        for d in os.listdir(target)
+        if os.path.isfile(os.path.join(target, d, "_SUCCESS"))
+    }
 
-    target = str(tmp_path / "t")
-    # a many-partition batch frame could fan out into many files per
-    # part= directory
-    sink = TombstoneTripleSink(spark, target, n_parts=4)
-    # the first batch lands on an empty target, the second is merged
-    # against the live set
-    for n, ids in enumerate([range(64), range(48, 112)], start=1):
-        batch = spark.createDataFrame(_rows(ids), TRIPLE_SCHEMA).repartition(8)
-        sink._merge_batch(batch)
-        for d in os.listdir(target):
-            if not d.startswith("part="):
-                continue
-            files = [
-                f for f in os.listdir(os.path.join(target, d))
-                if f.endswith(".parquet")
-            ]
-            assert len(files) == n, (d, files)
-    assert sink.current().count() == 112
+
+def test_upsert_append_one_file_set_per_batch(spark, tmp_path):
+    """Each batch commits ONE directory holding the file-count rule's
+    files, not one file per task — tiny-file commits dominate
+    small-batch appends.  The delta of a repartition(8) batch is kept
+    spread over 8 tasks (no AQE coalescing): appended through the
+    validator, which reads it back from its journal files, it is sized
+    from their bytes and lands as one file; a delta with no file under
+    it keeps the rule's unsized count."""
+    from shacl_spark.functions.terms import TRIPLE_SCHEMA
+    from shacl_spark.kg.materialize import file_count
+    from shacl_spark.streaming.upsert import TombstoneTripleSink
+    from shacl_spark.streaming.validate_stream import StreamingValidator
+
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        # the first batch lands on an empty target, the second is merged
+        # against the live set
+        sv = StreamingValidator(spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4)
+        appended = []
+        append = sv.sink._append
+
+        def spy(rows):
+            appended.append((rows.rdd.getNumPartitions(), file_count(rows)))
+            append(rows)
+
+        sv.sink._append = spy
+        for n, ids in enumerate([range(64), range(48, 112)], start=1):
+            batch = spark.createDataFrame(_rows(ids), TRIPLE_SCHEMA).repartition(8)
+            sv._on_batch(batch, n)
+            files = _committed_files(sv.sink.target_dir)
+            assert sorted(files) == [f"seq={i}" for i in range(1, n + 1)], files
+            tasks, n_files = appended[-1]
+            assert tasks > 1 and n_files == 1  # a spread journal, sized as one file
+            assert len(files[f"seq={n}"]) == 1, files
+        assert sv.sink.current().count() == 112
+
+        sink = TombstoneTripleSink(spark, str(tmp_path / "unsized"), n_parts=4)
+        changed = sink._merge_batch(spark.createDataFrame(_rows(range(64)), TRIPLE_SCHEMA).repartition(8))
+        assert changed.rdd.getNumPartitions() == 8
+        files = _committed_files(sink.target_dir)
+        assert list(files) == ["seq=1"]
+        assert len(files["seq=1"]) == file_count(changed) == 8
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_fixture_export(tmp_path, monkeypatch):
@@ -110,11 +140,14 @@ def test_fixture_export(tmp_path, monkeypatch):
     assert (sample / "expected_report.csv").exists()
 
 
-def test_upsert_untouched_partitions_not_rewritten(spark, tmp_path):
-    """The partitioned merge is O(touched): a batch that lands in one
-    hash partition leaves every other partition's files byte-identical
-    (VERDICT r01 #8)."""
+def test_upsert_earlier_batches_not_rewritten(spark, tmp_path):
+    """The append-only merge is O(touched): a later batch commits a new
+    directory and leaves every earlier file byte-identical (VERDICT r01
+    #8), whatever ``part`` values it touches; each file is sorted on
+    ``part``, and a replay appends nothing."""
     import hashlib
+
+    import pyarrow.parquet as pq
 
     from shacl_spark.functions.terms import TRIPLE_SCHEMA
     from shacl_spark.streaming.upsert import TombstoneTripleSink
@@ -133,22 +166,26 @@ def test_upsert_untouched_partitions_not_rewritten(spark, tmp_path):
         return out
 
     before = file_hashes()
-    assert len({os.path.dirname(p) for p in before}) == 8  # all partitions hit
+    assert {os.path.basename(os.path.dirname(p)) for p in before} == {"seq=1"}
+    parts = [pq.read_table(p).column("part").to_pylist() for p in before]
+    assert set().union(*parts) == set(range(8))  # all part values hit
+    assert all(ps == sorted(ps) for ps in parts)
 
-    # one new row -> exactly one partition touched
+    # one new row -> exactly one new committed directory
     sink._merge_batch(spark.createDataFrame(_rows([1000]), TRIPLE_SCHEMA))
     after = file_hashes()
     new_files = set(after) - set(before)
-    touched_dirs = {os.path.dirname(p) for p in new_files}
-    assert len(touched_dirs) == 1
+    assert {os.path.basename(os.path.dirname(p)) for p in new_files} == {"seq=2"}
+    assert sorted(_committed_files(target)) == ["seq=1", "seq=2"]
     for p, h in before.items():
-        assert after[p] == h, f"untouched file rewritten: {p}"
+        assert after[p] == h, f"earlier file rewritten: {p}"
     assert sink.current().count() == 65
 
     # idempotent replay of the same batch: nothing appended
     sink._merge_batch(spark.createDataFrame(_rows([1000]), TRIPLE_SCHEMA))
     assert spark.read.parquet(target).count() == 65
     assert file_hashes() == after
+    assert sorted(_committed_files(target)) == ["seq=1", "seq=2"]
 
 
 SHAPES = [

@@ -228,6 +228,9 @@ def test_crash_window_replay(spark, tmp_path, monkeypatch, window):
         "ex:a", "ex:c", "ex:rock"
     }
 
+    # the replay committed the batch, so its journal is pruned
+    assert sv._journal_fp(1) is None
+
     # a second replay is a no-op
     n = len(sv._versions())
     sv._on_batch(b2, 1)
@@ -309,6 +312,15 @@ def _op_batch(spark, rows_with_op):
     return tagged
 
 
+def _ops_batch(spark, adds, retracts):
+    """An ``op`` batch of ``adds`` ('+') and ``retracts`` ('-')."""
+    from pyspark.sql import functions as F
+
+    return triples_from_rows(spark, adds).select(SIX).withColumn("op", F.lit("+")).unionByName(
+        triples_from_rows(spark, retracts).select(SIX).withColumn("op", F.lit("-"))
+    )
+
+
 def test_tombstone_sink_merge_on_read(spark, tmp_path):
     """r04 CDC-with-deletes sink: live set = highest-seq op per triple
     identity filtered to '+'; same-batch +/- nets to '-'; replay and
@@ -344,6 +356,157 @@ def test_tombstone_sink_merge_on_read(spark, tmp_path):
     # re-add after a compacted delete works
     sink._merge_batch(_op_batch(spark, [(t1, "+")]))
     assert {r["subj"] for r in sink.current().collect()} == {"ex:a", "ex:b", "ex:c"}
+
+
+def _append_uncommitted(sink):
+    """An ``_append`` that dies in its job commit: the files land, the
+    ``_SUCCESS`` does not."""
+    real = sink._append
+
+    def append(rows):
+        seq = sink._next_seq()
+        real(rows)
+        os.remove(os.path.join(sink.target_dir, f"seq={seq}", "_SUCCESS"))
+        raise _Crash()
+
+    return append
+
+
+def _die_at_drop(n_done):
+    """An ``upsert._drop`` that raises once ``n_done`` directories are
+    deleted."""
+    import shacl_spark.streaming.upsert as up
+
+    real, done = up._drop, []
+
+    def drop(path):
+        if len(done) == n_done:
+            raise _Crash(path)
+        real(path)
+        done.append(path)
+
+    return drop
+
+
+@pytest.mark.parametrize("step", ["write", "commit", "delete"])
+def test_compaction_crash(spark, tmp_path, monkeypatch, step):
+    """A crash at each step of a compaction — in the new directory's
+    write (uncommitted), after its commit before any delete, after the
+    first delete — leaves the live set as it was, and the next batch,
+    which re-adds the triple the compaction dropped as dead, adds one
+    and retracts one, reports exactly what a full validation does."""
+    import shacl_spark.streaming.upsert as up
+
+    sv = StreamingValidator(
+        spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
+    )
+    with monkeypatch.context() as m:
+        m.setattr(sv.sink, "compaction_due", lambda: False)  # hold the log
+        sv._on_batch(_op_batch(spark, [(r, "+") for r in BATCH1]), 0)
+        sv._on_batch(
+            _op_batch(spark, [(r, "+") for r in BATCH2] + [(CRASH_RETRACT, "-")]), 1
+        )
+    assert [s for s, _ in sv.sink._committed()] == [1, 2]
+    live = _canon(sv.sink.current())
+    assert len(live) == len(CRASH_LIVE)
+
+    with monkeypatch.context() as m:
+        if step == "write":
+            m.setattr(sv.sink, "_append", _append_uncommitted(sv.sink))
+        else:
+            m.setattr(up, "_drop", _die_at_drop(0 if step == "commit" else 1))
+        with pytest.raises(_Crash):
+            sv.sink.compact()
+    assert _canon(sv.sink.current()) == live
+    assert [s for s, _ in sv.sink._committed()] == {
+        "write": [1, 2], "commit": [1, 2, 3], "delete": [2, 3]
+    }[step]
+
+    new = ("ex:d", T, "ex:Person")
+    b3 = [(CRASH_RETRACT, "+"), (new, "+"), (BATCH2[0], "-")]
+    sv._on_batch(_op_batch(spark, b3), 2)
+    expected = [r for r in CRASH_LIVE if r != BATCH2[0]] + [CRASH_RETRACT, new]
+    assert sv.sink.current().count() == len(expected)
+    full = validate(spark, triples_from_rows(spark, expected), SHAPES)
+    assert _canon(sv.current_report()) == _canon(full)
+    assert _canon(sv.current_report()) == _canon(validate(spark, sv.sink.current(), SHAPES))
+    # a later compaction folds whatever the crash left into one base
+    sv.sink.compact()
+    assert len(sv.sink._committed()) == 1
+    assert sv.sink.current().count() == len(expected)
+
+
+def test_long_stream_stays_bounded(spark, tmp_path):
+    """Ten small churn batches, each retracting two whole nodes,
+    adding two new ones and re-adding a retracted triple: after each
+    one the target's committed directories and bytes stay within a
+    fixed multiple of a one-shot write of the live set, each report
+    version is one file, and the footprint-edge vocabulary stays within
+    a multiple of the live nodes although every batch brings new ones;
+    the final report equals a full validation of the live set."""
+    import random
+
+    from shacl_spark.kg.materialize import UNSIZED_FILES
+
+    rng = random.Random(7)
+    unsized = max(spark.sparkContext.defaultParallelism, UNSIZED_FILES)
+    sv = StreamingValidator(
+        spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
+    )
+
+    def person(i):
+        return [
+            (f"ex:p{i}", T, "ex:Person"),
+            (f"ex:p{i}", "ex:name", f"P{i}", "literal", STR),
+            (f"ex:p{i}", "ex:knows", f"ex:p{i + 1}"),
+        ]
+
+    people = list(range(30))
+    live = {r for i in people for r in person(i)}
+    sv._on_batch(_ops_batch(spark, sorted(live), []), 0)
+    one_shot = str(tmp_path / "one_shot")
+    retracted: list = []
+    max_ratio = max_vocab = 0.0
+    for b in range(1, 11):
+        gone = [people.pop(rng.randrange(len(people))) for _ in range(2)]
+        fresh = [30 + 2 * b, 31 + 2 * b]
+        people += fresh
+        rets = [r for i in gone for r in person(i)]
+        adds = [r for i in fresh for r in person(i)]
+        if retracted:
+            adds.append(retracted.pop(rng.randrange(len(retracted))))
+        sv._on_batch(_ops_batch(spark, adds, rets), b)
+        live = (live - set(rets)) | set(adds)
+        retracted += rets
+
+        triples_from_rows(spark, sorted(live)).coalesce(1).write.mode("overwrite").parquet(
+            one_shot
+        )
+        live_bytes = sum(
+            os.path.getsize(os.path.join(one_shot, f)) for f in os.listdir(one_shot)
+        )
+        dirs = sv.sink._committed()
+        target_bytes = sum(
+            os.path.getsize(os.path.join(d, f)) for _, d in dirs for f in os.listdir(d)
+        )
+        assert len(dirs) <= 4, (b, dirs)
+        assert target_bytes <= 4 * live_bytes, (b, target_bytes, live_bytes)
+        for v in sv._versions():
+            vdir = os.path.join(sv.report_dir, f"v={v}")
+            files = [f for f in os.listdir(vdir) if f.endswith(".parquet")]
+            # an incremental version is sized from the listed bytes of
+            # the one before it; the first, a full validation over the
+            # engine's checkpointed input, lists none (the unsized count)
+            assert len(files) == 1 or (v == 1 and len(files) <= unsized), (b, v, files)
+        nodes = {r[0] for r in live} | {r[2] for r in live if len(r) == 3}
+        assert sv._edges is not None and len(sv._edges._vocab) <= 2 * len(nodes), b
+        max_ratio = max(max_ratio, target_bytes / live_bytes)
+        max_vocab = max(max_vocab, len(sv._edges._vocab) / len(nodes))
+
+    assert sv.sink.current().count() == len(live)
+    full = validate(spark, triples_from_rows(spark, sorted(live)), SHAPES)
+    assert _canon(sv.current_report()) == _canon(full)
+    print(f"target/live bytes <= {max_ratio:.2f}, vocabulary/live nodes <= {max_vocab:.2f}")
 
 
 def test_cdc_stream_validation_with_deletes(spark, tmp_path):
