@@ -9,10 +9,10 @@
         [--cdc]      # the feed's files carry an 'op' column ('+' / '-')
         [--follow]   # keep running; default drains available input and exits
 
-Each micro-batch upserts and retracts (exactly-once, reading only the
-touched hash keys; a feed without ``--cdc`` is all upserts),
-incrementally revalidates only the affected focus nodes, and writes a
-new report version.
+Each micro-batch upserts and retracts exactly once (a feed without
+``--cdc`` is all upserts), committing its net change as one target
+directory, incrementally revalidates only the affected focus nodes, and
+writes a new report version.
 Prints a one-line JSON summary of the final report.
 """
 
@@ -29,7 +29,6 @@ def main(argv=None) -> int:
     p.add_argument("--shapes", required=True)
     p.add_argument("--target", required=True)
     p.add_argument("--report", required=True)
-    p.add_argument("--n-parts", dest="n_parts", type=int, default=16)
     p.add_argument("--follow", action="store_true")
     p.add_argument(
         "--cdc", action="store_true",
@@ -48,8 +47,7 @@ def main(argv=None) -> int:
 
     spark = get_spark("validate_stream", master=args.master)
     sv = StreamingValidator(
-        spark, _read_shapes_rows(spark, args.shapes), args.target, args.report,
-        n_parts=args.n_parts,
+        spark, _read_shapes_rows(spark, args.shapes), args.target, args.report
     )
     schema = TRIPLE_SCHEMA
     if args.cdc:

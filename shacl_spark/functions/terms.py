@@ -121,11 +121,6 @@ def value_key() -> Column:
     )
 
 
-def term_key(kind: str, value: str, dt: str | None = None, lang: str | None = None) -> str:
-    """Driver-side mirror of :func:`value_key` for literal constants."""
-    return "\x01".join([kind, value, dt or "", lang or ""])
-
-
 # --- unique node keys (focus/value-node identity) ----------------------------
 #
 # Node frames key each term by ONE string that is globally unique per

@@ -125,23 +125,6 @@ def minhash_signature_from_words(
     return _sig(wh_col)
 
 
-def minhash_signature_cols(hashed_col: Column, n_hashes: int = 64) -> Column:
-    """Pure-Column variant (no Python) — fine for small n_hashes; kept
-    for environments where Python workers are undesirable."""
-    a_list, b_list = _perm_coeffs(n_hashes)
-    return F.array(
-        *[
-            F.array_min(
-                F.transform(
-                    hashed_col,
-                    lambda h, a=a, b=b: F.pmod(h * F.lit(a) + F.lit(b), F.lit(MERSENNE31)),
-                )
-            )
-            for a, b in zip(a_list, b_list)
-        ]
-    )
-
-
 def band_hashes(sig: Column, bands: int, rows: int) -> Column:
     """Split the signature into ``bands`` bands of ``rows`` values and
     hash each band → array<int> of length ``bands``."""

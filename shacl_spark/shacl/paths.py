@@ -37,16 +37,6 @@ NODE_COLS = ["node", "kind", "dt", "lang"]
 VN_COLS = ["focus", "value", "kind", "dt", "lang"]
 
 
-def _vn_key_cols() -> list:
-    return [
-        F.col("focus"),
-        F.col("value"),
-        F.col("kind"),
-        F.coalesce(F.col("dt"), F.lit("")),
-        F.coalesce(F.col("lang"), F.lit("")),
-    ]
-
-
 def dedupe_vn(vn: DataFrame) -> DataFrame:
     return vn.dropDuplicates(["focus", "value", "kind", "dt", "lang"])
 

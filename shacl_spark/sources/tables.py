@@ -97,8 +97,3 @@ def iceberg_writer(
 
 def load_tables(spark: SparkSession, sf_dir: str, names=None) -> dict[str, DataFrame]:
     return {n: load_table(spark, sf_dir, n) for n in (names or TPCH_TABLES)}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=None) -> None:
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)

@@ -5,48 +5,48 @@ Without a Delta/Iceberg MERGE target in this container, the upsert is
 emulated scale-correctly.  Each batch row carries an ``op`` column
 (``'+'`` upsert / ``'-'`` delete); a batch without one is all ``'+'``,
 so an adds-only feed is a CDC feed with no retractions.  The target is
-APPEND-ONLY: every accepted change is written as ``(triple, op, seq,
-part)`` and :meth:`TombstoneTripleSink.current` reconstructs the live
-set by keeping the highest-``seq`` op per triple identity and filtering
-to ``'+'`` — the merge-on-read shape (Hudi/Iceberg MOR).
+APPEND-ONLY: every accepted change is written as ``(triple, op, seq)``
+and :meth:`TombstoneTripleSink.current` reconstructs the live set by
+keeping the highest-``seq`` op per triple identity and filtering to
+``'+'`` — the merge-on-read shape (Hudi/Iceberg MOR).
 
 Layout: each committed batch is one directory ``seq=<n>`` holding one
 file set, and ``seq`` in its rows is ``n``.  The file count is
 :func:`~shacl_spark.kg.materialize.file_count` of the written frame,
-applied through a ``coalesce`` (no shuffle).  ``part =
-pmod(xxhash64(tid), n_parts)`` is a data column and every file is
-sorted on it, so a ``part IN touched`` read skips files and row groups
-by their parquet min/max statistics.  Reads list the directories and
-see only those holding ``_SUCCESS``; the next ``seq`` is the newest
-committed one plus one, from the same listing (no Spark job).  A write
-that dies before its commit leaves a directory without ``_SUCCESS``,
-which reads ignore and the next append at that ``seq`` overwrites.
+applied through a ``coalesce`` (no shuffle).  Reads list the
+directories and see only those holding ``_SUCCESS``; the next ``seq``
+is the newest committed one plus one, from the same listing (no Spark
+job).  A write that dies before its commit leaves a directory without
+``_SUCCESS``, which reads ignore and the next append at that ``seq``
+overwrites.
 
 Each micro-batch
 
 1. nets itself per ``tid`` (``'-'`` wins a same-batch ``+``/``-``
    pair: the net effect of add+retract is absence),
-2. reads the touched ``part`` values of the target to find which
-   triples are live, and
+2. reads the target to find which of its triples are live, and
 3. APPENDS the rows that change the live set as a new directory.
 
-This is O(|batch| + |touched rows' files|) per batch — not O(|target|)
-— and there is no delete/rename swap window.  A replay that re-appends
-rows already committed writes equal-op duplicates at a higher ``seq``;
-the window in :meth:`TombstoneTripleSink._latest` collapses them.
+A committed directory is the exact net delta of its batch, ``op``
+included, so it doubles as the batch's journal: a consumer that records
+which ``seq`` it has processed finds the unprocessed deltas in the
+listing (streaming/validate_stream.py).  A replay of a committed batch
+computes an empty delta and appends nothing.
 
-Compaction (:meth:`TombstoneTripleSink.compact`, run by the validator
-when :meth:`TombstoneTripleSink.compaction_due`): once the directories
-newer than the oldest one hold as many bytes as the oldest one, the
-live rows are written as a new directory at the next ``seq``, and only
-after that commit are the older directories deleted, oldest first, each
-by removing its ``_SUCCESS`` before its files.  At every crash point the
-newest row of each triple identity is in the new base or in a surviving
-newer directory, so reads stay exact.  The rewrite is geometric: its
-amortized cost is O(1) per appended byte, stored bytes stay O(live),
-and the ``current()`` window covers the live set plus recent batches,
-not the history.  On a cluster with Delta/Iceberg the append becomes a
-single MERGE INTO; the streaming scaffolding is unchanged.
+Compaction, run by the validator when
+:meth:`TombstoneTripleSink.compaction_due` (the directories newer than
+the oldest one hold as many bytes as the oldest one), is two steps:
+:meth:`~TombstoneTripleSink.commit_base` writes the live rows as a new
+directory at the next ``seq``, and only after that commit
+:meth:`~TombstoneTripleSink.drop_before` deletes the older directories,
+oldest first, each by removing its ``_SUCCESS`` before its files.  At
+every crash point the newest row of each triple identity is in the new
+base or in a surviving newer directory, so reads stay exact.  The
+rewrite is geometric: its amortized cost is O(1) per appended byte,
+stored bytes stay O(live), and the ``current()`` window covers the live
+set plus recent batches, not the history.  On a cluster with
+Delta/Iceberg the append becomes a single MERGE INTO; the streaming
+scaffolding is unchanged.
 """
 
 from __future__ import annotations
@@ -62,14 +62,13 @@ from pyspark.sql import Window as W
 from shacl_spark.functions.terms import TRIPLE_COLS, TRIPLE_SCHEMA, triple_id
 from shacl_spark.kg.materialize import file_count
 
-# the target's (and the journal's) layout, given to every read so that
-# no read pays a schema-inference job
+# the target's layout, given to every read so that no read pays a
+# schema-inference job
 _TARGET_SCHEMA = T.StructType(
     list(TRIPLE_SCHEMA.fields)
     + [
         T.StructField("op", T.StringType(), True),
         T.StructField("seq", T.LongType(), True),
-        T.StructField("part", T.IntegerType(), True),
     ]
 )
 
@@ -91,13 +90,9 @@ def _bytes(path: str) -> int:
 
 
 class TombstoneTripleSink:
-    def __init__(self, spark: SparkSession, target_dir: str, n_parts: int = 16):
-        """``n_parts`` fixes the hash-key range of the ``part`` column —
-        pick ~(total size / healthy row-group size) at deployment scale;
-        it must stay constant for the lifetime of a target directory."""
+    def __init__(self, spark: SparkSession, target_dir: str):
         self.spark = spark
         self.target_dir = target_dir
-        self.n_parts = n_parts
 
     def _committed(self) -> list[tuple[int, str]]:
         """``(seq, directory)`` of every committed batch, oldest first."""
@@ -142,24 +137,13 @@ class TombstoneTripleSink:
     def _compute_delta(self, batch: DataFrame) -> DataFrame:
         """``batch`` has the triple columns (``TRIPLE_COLS``; lineage
         may be null) and optionally ``op``.  Returns the rows to append
-        (materialized; triple columns plus tid/op/part/seq): the NET
-        changes of the live set, which are also the incremental
-        validator's ``changed`` — split out from the append so a
-        consumer can durably record the delta BEFORE it
-        (streaming/validate_stream.py's crash-atomicity protocol).
+        (materialized; triple columns plus tid/op): the NET changes of
+        the live set, which are also the incremental validator's
+        ``changed``.
 
         The batch feeds one aggregate: per tid the triple columns of
         one of its rows (all equal but lineage) and the net op, ``'-'``
-        winning (max in ASCII).
-
-        ``seq`` is the next committed directory's number, from the
-        target's listing, never from an epoch id: a stream restarted
-        without a checkpoint location renumbers epochs from 0, and an
-        epoch-derived seq would let an old row outrank a newer
-        tombstone in :meth:`_latest`.  Whether a tid is live only needs
-        the rows of its own ``part`` value (a tid has exactly one), so
-        the read below filters to the touched values and is
-        O(touched), not O(target)."""
+        winning (max in ASCII)."""
         rows = (
             batch.withColumn("tid", triple_id())
             .groupBy("tid")
@@ -167,15 +151,13 @@ class TombstoneTripleSink:
                 *[F.first(c).alias(c) for c in TRIPLE_COLS],
                 F.max(batch_op(batch)).alias("op"),
             )
-            .withColumn("part", F.pmod(F.xxhash64("tid"), F.lit(self.n_parts)).cast("int"))
         )
         existing = self._read(self._committed())
         if existing is None:
             applied = rows.where(F.col("op") == "+")
         else:
-            touched = [r["part"] for r in rows.select("part").distinct().collect()]
             live = (
-                self._latest(existing.where(F.col("part").isin(touched)))
+                self._latest(existing)
                 .where(F.col("op") == "+")
                 .select("tid", F.lit(True).alias("__live"))
             )
@@ -186,34 +168,35 @@ class TombstoneTripleSink:
                 .where((F.col("op") == "+") == F.col("__live").isNull())
                 .drop("__live")
             )
-        return applied.withColumn("seq", F.lit(self._next_seq()).cast("long")).localCheckpoint(
-            eager=True
-        )
+        return applied.localCheckpoint(eager=True)
 
-    def _append(self, rows: DataFrame) -> None:
-        """Commit ``rows`` (a delta from :meth:`_compute_delta` or its
-        journal, or the live set) as the next ``seq=<n>`` directory:
-        :func:`file_count` files of ``rows``, each sorted on ``part``;
-        ``seq`` is set to ``n``.  Overwrite clears what an uncommitted
-        write at ``n`` left behind."""
+    def _append(self, rows: DataFrame) -> int:
+        """Commit ``rows`` (a delta from :meth:`_compute_delta`, or the
+        live set) as the next ``seq=<n>`` directory of
+        :func:`file_count` files; returns ``n``.  ``seq`` comes from the
+        target's listing, never from an epoch id: a stream restarted
+        without a checkpoint location renumbers epochs from 0, and an
+        epoch-derived seq would let an old row outrank a newer
+        tombstone in :meth:`_latest`.  Overwrite clears what an
+        uncommitted write at ``n`` left behind."""
         seq = self._next_seq()
         (
             rows.drop("tid")
             .withColumn("seq", F.lit(seq).cast("long"))
             .coalesce(file_count(rows))
-            .sortWithinPartitions("part")
             .write.mode("overwrite")
             .parquet(os.path.join(self.target_dir, f"seq={seq}"))
         )
+        return seq
 
     def _merge_batch(self, batch: DataFrame) -> DataFrame:
         """Merge one micro-batch; returns the NET change rows (triple
-        columns; additions and removals).  A batch with no net change
-        commits no directory."""
+        columns and ``op``; additions and removals).  A batch with no
+        net change commits no directory."""
         applied = self._compute_delta(batch)
         if not applied.isEmpty():
             self._append(applied)
-        return applied.select(TRIPLE_COLS)
+        return applied.drop("tid")
 
     def compaction_due(self) -> bool:
         """The geometric rule: the committed directories newer than the
@@ -221,15 +204,16 @@ class TombstoneTripleSink:
         sizes = [_bytes(d) for _, d in self._committed()]
         return len(sizes) > 1 and sum(sizes[1:]) >= sizes[0]
 
-    def compact(self) -> None:
-        """Fold tombstones: commit the live rows as the next directory,
-        then delete every older one, oldest first (the background
-        compaction a MOR table runs; the crash order is in the module
-        docstring)."""
-        old = self._committed()
-        existing = self._read(old)
-        if existing is None:
-            return
-        self._append(self._latest(existing).where(F.col("op") == "+"))
-        for _, d in old:
-            _drop(d)
+    def commit_base(self) -> int:
+        """Compaction's first step: commit the live rows as the next
+        directory; returns its seq."""
+        existing = self._read(self._committed())
+        return self._append(self._latest(existing).where(F.col("op") == "+"))
+
+    def drop_before(self, seq: int) -> None:
+        """Compaction's last step: delete every committed directory
+        older than ``seq``, oldest first (the crash order is in the
+        module docstring)."""
+        for s, d in self._committed():
+            if s < seq:
+                _drop(d)

@@ -80,42 +80,33 @@ def _committed_files(target):
 def test_upsert_append_one_file_set_per_batch(spark, tmp_path):
     """Each batch commits ONE directory holding the file-count rule's
     files, not one file per task — tiny-file commits dominate
-    small-batch appends.  The delta of a repartition(8) batch is kept
-    spread over 8 tasks (no AQE coalescing): appended through the
-    validator, which reads it back from its journal files, it is sized
-    from their bytes and lands as one file; a delta with no file under
-    it keeps the rule's unsized count."""
+    small-batch appends.  Through the validator, under the session's
+    AQE partition coalescing, the checkpointed delta of a
+    repartition(8) batch is one partition and lands as one file (the
+    ``coalesce`` never raises the count); a delta kept spread over 8
+    tasks (no AQE coalescing) with no file under it keeps the rule's
+    unsized count."""
     from shacl_spark.functions.terms import TRIPLE_SCHEMA
     from shacl_spark.kg.materialize import file_count
     from shacl_spark.streaming.upsert import TombstoneTripleSink
     from shacl_spark.streaming.validate_stream import StreamingValidator
 
+    # the first batch lands on an empty target, the second is merged
+    # against the live set
+    sv = StreamingValidator(spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"))
+    for n, ids in enumerate([range(64), range(48, 112)], start=1):
+        batch = spark.createDataFrame(_rows(ids), TRIPLE_SCHEMA).repartition(8)
+        sv._on_batch(batch, n)
+        files = _committed_files(sv.sink.target_dir)
+        assert sorted(files) == [f"seq={i}" for i in range(1, n + 1)], files
+        assert len(files[f"seq={n}"]) == 1, files
+    assert sv.sink.current().count() == 112
+
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     prev = spark.conf.get(key)
     spark.conf.set(key, "false")
     try:
-        # the first batch lands on an empty target, the second is merged
-        # against the live set
-        sv = StreamingValidator(spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4)
-        appended = []
-        append = sv.sink._append
-
-        def spy(rows):
-            appended.append((rows.rdd.getNumPartitions(), file_count(rows)))
-            append(rows)
-
-        sv.sink._append = spy
-        for n, ids in enumerate([range(64), range(48, 112)], start=1):
-            batch = spark.createDataFrame(_rows(ids), TRIPLE_SCHEMA).repartition(8)
-            sv._on_batch(batch, n)
-            files = _committed_files(sv.sink.target_dir)
-            assert sorted(files) == [f"seq={i}" for i in range(1, n + 1)], files
-            tasks, n_files = appended[-1]
-            assert tasks > 1 and n_files == 1  # a spread journal, sized as one file
-            assert len(files[f"seq={n}"]) == 1, files
-        assert sv.sink.current().count() == 112
-
-        sink = TombstoneTripleSink(spark, str(tmp_path / "unsized"), n_parts=4)
+        sink = TombstoneTripleSink(spark, str(tmp_path / "unsized"))
         changed = sink._merge_batch(spark.createDataFrame(_rows(range(64)), TRIPLE_SCHEMA).repartition(8))
         assert changed.rdd.getNumPartitions() == 8
         files = _committed_files(sink.target_dir)
@@ -141,19 +132,16 @@ def test_fixture_export(tmp_path, monkeypatch):
 
 
 def test_upsert_earlier_batches_not_rewritten(spark, tmp_path):
-    """The append-only merge is O(touched): a later batch commits a new
-    directory and leaves every earlier file byte-identical (VERDICT r01
-    #8), whatever ``part`` values it touches; each file is sorted on
-    ``part``, and a replay appends nothing."""
+    """The append-only merge never rewrites: a later batch commits a
+    new directory and leaves every earlier file byte-identical (VERDICT
+    r01 #8), and a replay appends nothing."""
     import hashlib
-
-    import pyarrow.parquet as pq
 
     from shacl_spark.functions.terms import TRIPLE_SCHEMA
     from shacl_spark.streaming.upsert import TombstoneTripleSink
 
     target = str(tmp_path / "target")
-    sink = TombstoneTripleSink(spark, target, n_parts=8)
+    sink = TombstoneTripleSink(spark, target)
     sink._merge_batch(spark.createDataFrame(_rows(range(64)), TRIPLE_SCHEMA))
 
     def file_hashes():
@@ -167,9 +155,6 @@ def test_upsert_earlier_batches_not_rewritten(spark, tmp_path):
 
     before = file_hashes()
     assert {os.path.basename(os.path.dirname(p)) for p in before} == {"seq=1"}
-    parts = [pq.read_table(p).column("part").to_pylist() for p in before]
-    assert set().union(*parts) == set(range(8))  # all part values hit
-    assert all(ps == sorted(ps) for ps in parts)
 
     # one new row -> exactly one new committed directory
     sink._merge_batch(spark.createDataFrame(_rows([1000]), TRIPLE_SCHEMA))
@@ -229,7 +214,6 @@ def test_validate_stream_job_main(spark, tmp_path, capsys, cdc):
     args = [
         "--stream", str(stream / "*"), "--shapes", shapes,
         "--target", str(tmp_path / "t"), "--report", str(tmp_path / "r"),
-        "--n-parts", "4",
     ]
     assert main(args + (["--cdc"] if cdc else [])) == 0
     out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])

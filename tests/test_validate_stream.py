@@ -11,7 +11,7 @@ import pytest
 import shacl_spark.streaming.validate_stream as vs_mod
 from shacl_spark.functions.terms import RDF, SH, TRIPLE_SCHEMA, XSD, triples_from_rows
 from shacl_spark.shacl import validate
-from shacl_spark.streaming.validate_stream import StreamingValidator, fingerprint
+from shacl_spark.streaming.validate_stream import StreamingValidator
 
 T = RDF + "type"
 INT = XSD + "integer"
@@ -176,14 +176,19 @@ def _die_at_touch(prefix, after):
 
 def _crash(name, m, sv):
     """Make the program step that follows the named boundary raise."""
-    if name == "journal":  # the journal's _fp_ file is its commit
-        m.setattr(vs_mod, "_touch", _die_at_touch("_fp_", after=True))
-    elif name == "append":  # the step after the target append
+    if name == "write":  # the batch's directory is written, not committed
+        m.setattr(sv.sink, "_append", _append_uncommitted(sv.sink))
+    elif name == "commit":  # the step after the target commit
         m.setattr(sv.sink, "current", _raise)
     elif name == "report":  # report parquet committed, no marker yet
-        m.setattr(vs_mod, "_touch", _die_at_touch("_epoch_", after=False))
-    else:  # "marker": marker written, journal not yet pruned
-        m.setattr(vs_mod, "_touch", _die_at_touch("_epoch_", after=True))
+        m.setattr(vs_mod, "_touch", _die_at_touch("_seq_", after=False))
+    else:  # "marker": the batch fully committed
+        m.setattr(vs_mod, "_touch", _die_at_touch("_seq_", after=True))
+
+
+def _pending(sv):
+    """The committed target directories above the seq the report covers."""
+    return [s for s, _ in sv.sink._committed() if s > sv._covered()]
 
 
 # batch 2 adds BATCH2 and retracts a's name: a, c and rock end up
@@ -192,7 +197,7 @@ CRASH_RETRACT = ("ex:a", "ex:name", "A", "literal", STR)
 CRASH_LIVE = [r for r in BATCH1 + BATCH2 if r != CRASH_RETRACT]
 
 
-@pytest.mark.parametrize("window", ["journal", "append", "report", "marker"])
+@pytest.mark.parametrize("window", ["write", "commit", "report", "marker"])
 def test_crash_window_replay(spark, tmp_path, monkeypatch, window):
     """A crash at each durable-write boundary of a batch that adds AND
     retracts: the epoch replay yields the report of a full validation
@@ -210,14 +215,15 @@ def test_crash_window_replay(spark, tmp_path, monkeypatch, window):
         with pytest.raises(_Crash):
             sv._on_batch(b2, 1)
     # what the crash left behind
-    applied = window != "journal"
+    applied = window != "write"
     assert sv.sink.current().count() == len(CRASH_LIVE if applied else BATCH1)
     reported = window in ("report", "marker")
     assert len(sv._versions()) == (2 if reported else 1)
-    assert sv._journal_fp(1) is not None  # the journal is never pruned
+    # a committed batch directory the report does not cover is the
+    # batch's only record: the replay's own delta is EMPTY (rows already
+    # applied), so without it the report would stay stale forever
+    assert bool(_pending(sv)) == (window in ("commit", "report"))
 
-    # the replay: without the journal its delta would be EMPTY (rows
-    # already applied) and the report would stay stale forever
     sv._on_batch(b2, 1)
     assert sv.sink.current().count() == len(CRASH_LIVE)
     full = validate(spark, sv.sink.current(), SHAPES)
@@ -227,9 +233,8 @@ def test_crash_window_replay(spark, tmp_path, monkeypatch, window):
     assert {r["focus"] for r in sv.current_report().collect()} == {
         "ex:a", "ex:c", "ex:rock"
     }
-
-    # the replay committed the batch, so its journal is pruned
-    assert sv._journal_fp(1) is None
+    # the replay reported every committed directory
+    assert _pending(sv) == []
 
     # a second replay is a no-op
     n = len(sv._versions())
@@ -238,64 +243,31 @@ def test_crash_window_replay(spark, tmp_path, monkeypatch, window):
     assert sv.sink.current().count() == len(CRASH_LIVE)
 
 
-def test_fingerprint_is_one_rule(spark, tmp_path):
-    """The fingerprint _on_batch records (an Observation on the batch
-    feeding the delta job) equals a direct aggregate of the same
-    expressions on the raw batch — for a triple-column batch with an
-    in-batch duplicate and an op batch with a same-batch +/- pair, each
-    on an empty and on a non-empty target."""
-    dup = triples_from_rows(spark, BATCH2 + BATCH2[:1]).select(SIX)
-    pair = _op_batch(
-        spark, [(r, "+") for r in BATCH2] + [(BATCH2[0], "-")]
-    )
-    for name, batch in [("dup", dup), ("pair", pair)]:
-        for seeded in (False, True):
-            root = tmp_path / f"{name}_{seeded}"
-            sv = StreamingValidator(
-                spark, SHAPES, str(root / "t"), str(root / "r"), n_parts=4
-            )
-            if seeded:
-                sv._on_batch(_batch_df(spark, BATCH1), 0)
-            row = batch.select(*fingerprint(batch)).collect()[0]
-            direct = f"{row['n']}_{row['s']}_{row['s2']}"
-            sv._on_batch(batch, 1)
-            marks = {
-                f
-                for v in sv._versions()
-                for f in os.listdir(os.path.join(sv.report_dir, f"v={v}"))
-                if f.startswith("_epoch_1_")
-            }
-            assert marks == {f"_epoch_1_{direct}"}, (name, seeded)
-            assert row["n"] == (len(BATCH2) + 1)
-
-
 def test_restarted_stream_epoch_id_collision(spark, tmp_path):
     """r04 review: a stream restarted WITHOUT a checkpoint location
-    numbers epochs from 0 again — a journal/marker keyed only by epoch
-    id would swallow the new batch.  The content fingerprint must route
-    the colliding epoch to the normal path."""
+    numbers epochs from 0 again — state keyed by epoch id would swallow
+    the new batch.  A fresh validator over the same directories takes
+    DIFFERENT content at epoch 0 as a new batch."""
     sv = StreamingValidator(
         spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
     )
     sv._on_batch(_batch_df(spark, BATCH1), 0)
     n1 = len(sv._versions())
 
-    # leave a stale committed journal for epoch 0 (crash before report,
-    # journal never pruned), then "restart": DIFFERENT data as epoch 0
-    stale = _batch_df(spark, BATCH1)
-    stale.limit(1).write.mode("overwrite").parquet(sv._delta_dir(0))
-    open(os.path.join(sv._delta_dir(0), "_fp_STALE"), "w").close()
-
-    sv._on_batch(_batch_df(spark, BATCH2), 0)  # new content, reused id
-    assert sv.sink.current().count() == len(BATCH1) + len(BATCH2)
+    # "restart": a fresh validator, DIFFERENT data as epoch 0
+    sv2 = StreamingValidator(
+        spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
+    )
+    sv2._on_batch(_batch_df(spark, BATCH2), 0)  # new content, reused id
+    assert sv2.sink.current().count() == len(BATCH1) + len(BATCH2)
     full = validate(spark, triples_from_rows(spark, BATCH1 + BATCH2), SHAPES)
-    assert _canon(sv.current_report()) == _canon(full)
-    assert len(sv._versions()) == n1 + 1
+    assert _canon(sv2.current_report()) == _canon(full)
+    assert len(sv2._versions()) == n1 + 1
 
     # and an exact REPLAY of the completed batch is still a no-op
-    nv = len(sv._versions())
-    sv._on_batch(_batch_df(spark, BATCH2), 0)
-    assert len(sv._versions()) == nv
+    nv = len(sv2._versions())
+    sv2._on_batch(_batch_df(spark, BATCH2), 0)
+    assert len(sv2._versions()) == nv
 
 
 def _op_batch(spark, rows_with_op):
@@ -327,7 +299,7 @@ def test_tombstone_sink_merge_on_read(spark, tmp_path):
     compaction preserve the state."""
     from shacl_spark.streaming.upsert import TombstoneTripleSink
 
-    sink = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
+    sink = TombstoneTripleSink(spark, str(tmp_path / "t"))
     t1 = ("ex:a", "ex:p", "1", "literal", XSD + "string")
     t2 = ("ex:b", "ex:p", "2", "literal", XSD + "string")
     t3 = ("ex:c", "ex:p", "3", "literal", XSD + "string")
@@ -351,7 +323,8 @@ def test_tombstone_sink_merge_on_read(spark, tmp_path):
     assert ch2b.isEmpty()
     assert {r["subj"] for r in sink.current().collect()} == {"ex:b", "ex:c"}
 
-    sink.compact()
+    sink.drop_before(sink.commit_base())
+    assert [s for s, _ in sink._committed()] == [3]
     assert {r["subj"] for r in sink.current().collect()} == {"ex:b", "ex:c"}
     # re-add after a compacted delete works
     sink._merge_batch(_op_batch(spark, [(t1, "+")]))
@@ -388,13 +361,15 @@ def _die_at_drop(n_done):
     return drop
 
 
-@pytest.mark.parametrize("step", ["write", "commit", "delete"])
+@pytest.mark.parametrize("step", ["write", "mark", "commit", "delete"])
 def test_compaction_crash(spark, tmp_path, monkeypatch, step):
-    """A crash at each step of a compaction — in the new directory's
-    write (uncommitted), after its commit before any delete, after the
-    first delete — leaves the live set as it was, and the next batch,
-    which re-adds the triple the compaction dropped as dead, adds one
-    and retracts one, reports exactly what a full validation does."""
+    """A crash at each step of a compaction the validator runs before a
+    batch — in the new base's write (uncommitted), after its commit
+    before the report is marked, after the mark before any delete,
+    after the first delete — leaves the live set as it was, and the
+    replayed batch, which re-adds the triple the compaction dropped as
+    dead, adds one and retracts one, reports exactly what a full
+    validation does."""
     import shacl_spark.streaming.upsert as up
 
     sv = StreamingValidator(
@@ -409,31 +384,46 @@ def test_compaction_crash(spark, tmp_path, monkeypatch, step):
     assert [s for s, _ in sv.sink._committed()] == [1, 2]
     live = _canon(sv.sink.current())
     assert len(live) == len(CRASH_LIVE)
+    versions = sv._versions()
 
+    new = ("ex:d", T, "ex:Person")
+    b3 = _op_batch(spark, [(CRASH_RETRACT, "+"), (new, "+"), (BATCH2[0], "-")])
     with monkeypatch.context() as m:
+        m.setattr(sv.sink, "compaction_due", lambda: True)
         if step == "write":
             m.setattr(sv.sink, "_append", _append_uncommitted(sv.sink))
+        elif step == "mark":
+            m.setattr(vs_mod, "_touch", _die_at_touch("_seq_", after=False))
         else:
             m.setattr(up, "_drop", _die_at_drop(0 if step == "commit" else 1))
         with pytest.raises(_Crash):
-            sv.sink.compact()
+            sv._on_batch(b3, 2)
     assert _canon(sv.sink.current()) == live
+    assert sv._versions() == versions
     assert [s for s, _ in sv.sink._committed()] == {
-        "write": [1, 2], "commit": [1, 2, 3], "delete": [2, 3]
+        "write": [1, 2], "mark": [1, 2, 3], "commit": [1, 2, 3], "delete": [2, 3]
     }[step]
+    assert sv._covered() == (2 if step in ("write", "mark") else 3)
 
-    new = ("ex:d", T, "ex:Person")
-    b3 = [(CRASH_RETRACT, "+"), (new, "+"), (BATCH2[0], "-")]
-    sv._on_batch(_op_batch(spark, b3), 2)
+    sv._on_batch(b3, 2)
     expected = [r for r in CRASH_LIVE if r != BATCH2[0]] + [CRASH_RETRACT, new]
     assert sv.sink.current().count() == len(expected)
     full = validate(spark, triples_from_rows(spark, expected), SHAPES)
     assert _canon(sv.current_report()) == _canon(full)
     assert _canon(sv.current_report()) == _canon(validate(spark, sv.sink.current(), SHAPES))
-    # a later compaction folds whatever the crash left into one base
-    sv.sink.compact()
+    assert _pending(sv) == []
+
+    # a later compaction folds whatever the crash left into one base,
+    # and a second replay adds no report version
+    n = len(sv._versions())
+    with monkeypatch.context() as m:
+        m.setattr(sv.sink, "compaction_due", lambda: True)
+        sv._on_batch(b3, 2)
     assert len(sv.sink._committed()) == 1
+    assert _pending(sv) == []  # the report is marked as covering the base
+    assert len(sv._versions()) == n
     assert sv.sink.current().count() == len(expected)
+    assert _canon(sv.current_report()) == _canon(full)
 
 
 def test_long_stream_stays_bounded(spark, tmp_path):
@@ -476,6 +466,7 @@ def test_long_stream_stays_bounded(spark, tmp_path):
         if retracted:
             adds.append(retracted.pop(rng.randrange(len(retracted))))
         sv._on_batch(_ops_batch(spark, adds, rets), b)
+        assert _pending(sv) == [], b  # every committed directory is reported
         live = (live - set(rets)) | set(adds)
         retracted += rets
 
@@ -558,13 +549,13 @@ def test_cdc_restart_epoch_renumbering_tombstone_wins(spark, tmp_path):
     t1 = ("ex:a", "ex:p", "1", "literal", XSD + "string")
     t2 = ("ex:b", "ex:p", "2", "literal", XSD + "string")
 
-    sink = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
+    sink = TombstoneTripleSink(spark, str(tmp_path / "t"))
     sink._merge_batch(_op_batch(spark, [(t1, "+")]))
     sink._merge_batch(_op_batch(spark, [(t2, "+")]))
     assert {r["subj"] for r in sink.current().collect()} == {"ex:a", "ex:b"}
 
     # "restart": a fresh sink on the same target, epochs from 0 again
-    sink2 = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
+    sink2 = TombstoneTripleSink(spark, str(tmp_path / "t"))
     ch = sink2._merge_batch(_op_batch(spark, [(t1, "-")]))
     assert {r["subj"] for r in ch.collect()} == {"ex:a"}  # delta reported
     assert {r["subj"] for r in sink2.current().collect()} == {"ex:b"}
@@ -572,7 +563,7 @@ def test_cdc_restart_epoch_renumbering_tombstone_wins(spark, tmp_path):
     assert seq[("ex:a", "-")] > seq[("ex:a", "+")]
 
     # and a re-add after the restart-delete also wins
-    sink3 = TombstoneTripleSink(spark, str(tmp_path / "t"), n_parts=4)
+    sink3 = TombstoneTripleSink(spark, str(tmp_path / "t"))
     sink3._merge_batch(_op_batch(spark, [(t1, "+")]))
     assert {r["subj"] for r in sink3.current().collect()} == {"ex:a", "ex:b"}
 
