@@ -10,6 +10,13 @@ cluster").
 
 With ``--synthetic N`` the deterministic corpus generator stands in
 for the input table (sandbox/bench mode).
+
+A finished run leaves the edge and node tables under ``--output`` (zstd
+parquet) and deletes its extraction checkpoint; a killed run keeps the
+checkpoint and a rerun resumes from it.  ``--no-checkpoint`` skips the
+checkpoint: a killed run then starts over.  The printed JSON line holds
+the row counts and ``bytes``, the size on disk of the two tables, under
+``metrics``.
 """
 
 from __future__ import annotations

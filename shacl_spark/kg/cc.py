@@ -16,6 +16,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from shacl_spark.session import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -74,19 +76,14 @@ def connected_components(
             stats["iterations"], stats["frontier"] = 0, []
             stats["mode"] = "local-union-find"
             stats["nodes"], stats["edges"] = len(nodes), len(pairs)
-        spark = edges.sparkSession
-        # a single-slice parallelized collection: re-running this
-        # lineage is a trivial local-list scan, so the old
-        # repartition(1) + eager checkpoint (~0.4 s of shuffle +
-        # blocking job PER canonicalize call) bought nothing (r06)
+        # a local relation, not a parallelized list: a Python-RDD scan
+        # would run these rows through a Python worker in every job that
+        # reads them (the edge write's broadcast of the component map)
         schema = T.StructType([
             T.StructField("id", T.StringType(), False),
             T.StructField("component", T.StringType(), False),
         ])
-        rdd = spark.sparkContext.parallelize(rows, 1) if rows else (
-            spark.sparkContext.emptyRDD()
-        )
-        return spark.createDataFrame(rdd, schema)
+        return local_frame(edges.sparkSession, rows, schema)
 
     if stats is not None:
         stats["mode"] = "distributed-label-propagation"

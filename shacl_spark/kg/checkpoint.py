@@ -17,6 +17,15 @@ is one group, one job and one scan; a large one still loses at most
 one group of work to a kill.  A corpus with no listed files (in-memory
 data, a non-file source) has no known size and keeps groups of
 ``UNSIZED_GROUP_SIZE`` partitions.
+
+The checkpoint lives until the build commits: once the edge and node
+tables are written, nothing reads it again, and :func:`drop` deletes it
+(at corpus scale it is a second copy of nearly every edge row).  A
+killed build keeps it and resumes.  :func:`drop` removes the manifest
+before the data: a crash between the two leaves data with no manifest,
+which a rerun re-extracts group by group in overwrite mode; the reverse
+order could leave a manifest naming deleted groups, and a rerun would
+then read nothing.
 """
 
 from __future__ import annotations
@@ -25,6 +34,7 @@ import glob
 import json
 import math
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,6 +64,14 @@ def input_bytes(df: DataFrame) -> int:
 
 def manifest_path(ckpt_dir: str) -> str:
     return os.path.join(ckpt_dir, "_manifest")
+
+
+def drop(ckpt_dir: str) -> None:
+    """Delete the checkpoint, manifest first (the order is the module
+    docstring's)."""
+    for path in (manifest_path(ckpt_dir), ckpt_dir):
+        if os.path.isdir(path):
+            shutil.rmtree(path)
 
 
 def completed_partitions(ckpt_dir: str) -> set[int]:

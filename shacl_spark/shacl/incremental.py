@@ -51,9 +51,9 @@ from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from shacl_spark.functions.terms import RDFS_SUBCLASSOF, node_key_col
+from shacl_spark.session import local_frame
 from shacl_spark.shacl.engine import Validator, validate
 from shacl_spark.shacl.parser import parse_shapes_graph
 from shacl_spark.shacl.shapes import (
@@ -284,30 +284,13 @@ def footprint_edges(
 # union-find).
 
 
-def _local_frame(
-    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
-) -> DataFrame:
-    """``rows`` as a frame Spark plans as a local relation.  It is built
-    from a pyarrow table: a Python list is planned as a Python-RDD scan,
-    whose partitions a one-file report write runs one after another."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.table([pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow)
-    return spark.createDataFrame(table, schema)
-
-
 def _hop_collect(
     spark: SparkSession, edges: DataFrame, frontier: set[str]
 ) -> set[str]:
     """One hop over ``edges`` DF[a, b]: ids reachable from ``frontier``."""
     if not frontier:
         return set()
-    fdf = _local_frame(spark, [(x,) for x in sorted(frontier)], "id string")
+    fdf = local_frame(spark, [(x,) for x in sorted(frontier)], "id string")
     rows = (
         edges.join(F.broadcast(fdf), edges["a"] == fdf["id"])
         .select("b")
@@ -570,7 +553,7 @@ def _restricted_filter(
     hierarchy.  One scan with two broadcast membership joins (measured
     0.8 s vs 27 s for an ``isin`` literal list at |ctx|=1.6k —
     Catalyst re-analyzes thousands of literal nodes per action)."""
-    idf = _local_frame(spark, [(x,) for x in sorted(ctx_ids)], "id string")
+    idf = local_frame(spark, [(x,) for x in sorted(ctx_ids)], "id string")
     inv_like = fp.inv_preds | fp.rec_inv | fp.tobj_preds
     marked = triples.join(
         F.broadcast(
@@ -723,7 +706,7 @@ def incremental_revalidate(
     aff_keys = acc | {r["okey"] for r in ch_rows}
     stats["mode"] = "incremental"
     stats["affected"] = len(aff_keys)
-    aff = _local_frame(spark, [(k,) for k in sorted(aff_keys)], "node string")
+    aff = local_frame(spark, [(k,) for k in sorted(aff_keys)], "node string")
 
     # --- forward (context) expansion: what can validating them read ----
     # sh:sparql BGPs can wander arbitrarily relative to ?this (and an
@@ -772,7 +755,7 @@ def incremental_revalidate(
 
         results = Oracle(slice_rows, shapes).validate(only_keys=aff_keys)
         stats["mode"] = "incremental_local"
-        new_rows = _local_frame(spark, [r.as_row() for r in results], REPORT_OUT_SCHEMA)
+        new_rows = local_frame(spark, [r.as_row() for r in results], REPORT_OUT_SCHEMA)
     else:
         # cache=False when validating the restricted slice: the slice is
         # already one checkpointed in-memory frame, and per-branch

@@ -3,9 +3,11 @@ validation of pipeline output, resume-after-kill identity."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from shacl_spark.kg import checkpoint, materialize
@@ -115,24 +117,34 @@ def test_default_group_rule(spark, tmp_path, monkeypatch):
 
 def test_checkpointed_build_equals_direct_build(spark, tmp_path):
     """Checkpointing changes how the KG is computed, not what it is:
-    the same edge columns, rows and triple ids, and the same report."""
+    the same edge columns, rows and triple ids, and the same report.  A
+    finished build drops its checkpoint, so a second corpus built into
+    the same directory gives that corpus's KG, not the first one's."""
     corpus = synth_corpus(spark, 40, parts=4).withColumn(
         "lang", F.when(F.hash("path") % 4 == 0, "cobol").otherwise(F.col("lang"))
     )
-    built = {}
-    for ckpt in (True, False):
-        out_dir = str(tmp_path / f"ckpt-{ckpt}")
+
+    def build(corpus, out_dir, ckpt):
         res = build_kg(
             spark, corpus, out_dir, shapes_rows=KG_METAMODEL, n_parts=N_PARTS, ckpt=ckpt
         )
         edges = spark.read.parquet(os.path.join(out_dir, "edges"))
-        built[ckpt] = (
+        return (
             edges.columns,
             sorted(map(tuple, edges.collect()), key=repr),
             sorted(map(tuple, res.report.collect()), key=repr),
         )
-    assert built[True][2], "the planted languages should be reported"
-    assert built[True] == built[False]
+
+    out_dir = str(tmp_path / "ckpt")
+    built = build(corpus, out_dir, True)
+    assert not os.path.exists(os.path.join(out_dir, "checkpoint"))
+    edge_file = glob.glob(os.path.join(out_dir, "edges", "*.parquet"))[0]
+    assert pq.ParquetFile(edge_file).metadata.row_group(0).column(0).compression == "ZSTD"
+    assert built[2], "the planted languages should be reported"
+    assert built == build(corpus, str(tmp_path / "direct"), False)
+
+    other = synth_corpus(spark, 25, parts=2)
+    assert build(other, out_dir, True) == build(other, str(tmp_path / "other"), False)
 
 
 def test_unsized_build_spreads_edge_files(spark, tmp_path, monkeypatch):

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
 
 import shacl_spark.streaming.validate_stream as vs_mod
@@ -494,6 +495,10 @@ def test_long_stream_stays_bounded(spark, tmp_path):
         max_ratio = max(max_ratio, target_bytes / live_bytes)
         max_vocab = max(max_vocab, len(sv._edges._vocab) / len(nodes))
 
+    # the session writes zstd; the codec is recorded in each footer
+    for d in (dirs[-1][1], os.path.join(sv.report_dir, f"v={sv._versions()[-1]}")):
+        f = min(n for n in os.listdir(d) if n.endswith(".parquet"))
+        assert pq.ParquetFile(os.path.join(d, f)).metadata.row_group(0).column(0).compression == "ZSTD"
     assert sv.sink.current().count() == len(live)
     full = validate(spark, triples_from_rows(spark, sorted(live)), SHAPES)
     assert _canon(sv.current_report()) == _canon(full)
