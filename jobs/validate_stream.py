@@ -14,6 +14,15 @@ Each micro-batch upserts and retracts exactly once (a feed without
 directory, incrementally revalidates only the affected focus nodes, and
 writes a new report version.
 Prints a one-line JSON summary of the final report.
+
+Run as ``python jobs/validate_stream.py``, ``get_spark`` launches the
+driver JVM itself, compiling with C1 only and with half the host's
+memory as heap (at most 16g). Under ``spark-submit`` the driver JVM
+starts first, so neither default applies; ask for them on the command
+line: ``spark-submit --driver-java-options -XX:TieredStopAtLevel=1
+--driver-memory 8g ...``. A long ``--follow`` run pays for C1 in batch
+latency, not CPU (SCALING.md, "Driver JVM"); ``spark-submit`` without
+the option keeps tiered C2.
 """
 
 from __future__ import annotations
