@@ -18,12 +18,8 @@ checkpoint: a killed run then starts over.  The printed JSON line holds
 the row counts and ``bytes``, the size on disk of the two tables, under
 ``metrics``.
 
-Run as ``python jobs/build_kg.py``, ``get_spark`` launches the driver
-JVM itself, compiling with C1 only and with half the host's memory as
-heap (at most 16g). Under ``spark-submit`` the driver JVM starts first,
-so neither default applies; ask for them on the command line:
-``spark-submit --driver-java-options -XX:TieredStopAtLevel=1
---driver-memory 8g ...``.
+The driver JVM defaults of ``get_spark`` apply only when it launches the
+JVM, not under ``spark-submit`` (SCALING.md, "Driver JVM").
 """
 
 from __future__ import annotations

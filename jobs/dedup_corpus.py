@@ -11,12 +11,8 @@ Exact tier first (sha256 groupBy, linear), then minhash-LSH blocking →
 n-gram-Jaccard verify → connected components → keep the min-id
 representative per duplicate cluster.  Prints a one-line JSON summary.
 
-Run as ``python jobs/dedup_corpus.py``, ``get_spark`` launches the
-driver JVM itself, compiling with C1 only and with half the host's
-memory as heap (at most 16g). Under ``spark-submit`` the driver JVM
-starts first, so neither default applies; ask for them on the command
-line: ``spark-submit --driver-java-options -XX:TieredStopAtLevel=1
---driver-memory 8g ...``.
+The driver JVM defaults of ``get_spark`` apply only when it launches the
+JVM, not under ``spark-submit`` (SCALING.md, "Driver JVM").
 """
 
 from __future__ import annotations

@@ -23,12 +23,8 @@ Output: one column per selected variable (lexical form) plus
 Without ``--out``, prints up to ``--limit`` rows (default 100) as JSON
 lines, then a summary line.
 
-Run as ``python jobs/query_graph.py``, ``get_spark`` launches the driver
-JVM itself, compiling with C1 only and with half the host's memory as
-heap (at most 16g). Under ``spark-submit`` the driver JVM starts first,
-so neither default applies; ask for them on the command line:
-``spark-submit --driver-java-options -XX:TieredStopAtLevel=1
---driver-memory 8g ...``.
+The driver JVM defaults of ``get_spark`` apply only when it launches the
+JVM, not under ``spark-submit`` (SCALING.md, "Driver JVM").
 """
 
 from __future__ import annotations

@@ -14,12 +14,8 @@ inputs).
 Prints a JSON summary line (conforms, violation counts by component);
 optionally writes the full report frame.
 
-Run as ``python jobs/validate_graph.py``, ``get_spark`` launches the
-driver JVM itself, compiling with C1 only and with half the host's
-memory as heap (at most 16g). Under ``spark-submit`` the driver JVM
-starts first, so neither default applies; ask for them on the command
-line: ``spark-submit --driver-java-options -XX:TieredStopAtLevel=1
---driver-memory 8g ...``.
+The driver JVM defaults of ``get_spark`` apply only when it launches the
+JVM, not under ``spark-submit`` (SCALING.md, "Driver JVM").
 """
 
 from __future__ import annotations

@@ -15,14 +15,8 @@ directory, incrementally revalidates only the affected focus nodes, and
 writes a new report version.
 Prints a one-line JSON summary of the final report.
 
-Run as ``python jobs/validate_stream.py``, ``get_spark`` launches the
-driver JVM itself, compiling with C1 only and with half the host's
-memory as heap (at most 16g). Under ``spark-submit`` the driver JVM
-starts first, so neither default applies; ask for them on the command
-line: ``spark-submit --driver-java-options -XX:TieredStopAtLevel=1
---driver-memory 8g ...``. A long ``--follow`` run pays for C1 in batch
-latency, not CPU (SCALING.md, "Driver JVM"); ``spark-submit`` without
-the option keeps tiered C2.
+The driver JVM defaults of ``get_spark`` apply only when it launches the
+JVM, not under ``spark-submit`` (SCALING.md, "Driver JVM").
 """
 
 from __future__ import annotations
@@ -54,7 +48,14 @@ def main(argv=None) -> int:
 
     from jobs.validate_graph import _read_shapes_rows
 
-    spark = get_spark("validate_stream", master=args.master)
+    # a --follow driver lives for hours; on warm CDC batches tiered C2
+    # (HotSpot's default) measured lower latency than get_spark's
+    # C1-only default (SCALING.md, "Driver JVM")
+    follow_conf = {"spark.driver.defaultJavaOptions": "-XX:TieredStopAtLevel=4"}
+    spark = get_spark(
+        "validate_stream", master=args.master,
+        extra_conf=follow_conf if args.follow else None,
+    )
     sv = StreamingValidator(
         spark, _read_shapes_rows(spark, args.shapes), args.target, args.report
     )

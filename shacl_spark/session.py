@@ -135,8 +135,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.driver.memory", driver_mem)
-        # C1 only (module docstring); Spark puts this key in front of
-        # extraJavaOptions, which deployments keep for their own flags
+        # C1 only (module docstring).  Spark puts this key in front of
+        # extraJavaOptions; as builder config it also replaces a value
+        # from spark-defaults.conf, so a caller that needs both passes
+        # the merged value through extra_conf (SCALING.md, "Driver JVM")
         .config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     )
     if local_dir:

@@ -6,6 +6,9 @@ import subprocess
 import sys
 from pathlib import Path
 
+import pytest
+
+import shacl_spark.session
 from shacl_spark.session import default_driver_memory
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -43,3 +46,21 @@ def test_extra_conf_replaces_the_jit_default(spark):
     bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
     tiers = [a for a in bean.getInputArguments() if a.startswith("-XX:TieredStopAtLevel=")]
     assert tiers[-1] == "-XX:TieredStopAtLevel=4"
+
+
+@pytest.mark.parametrize("follow", [False, True], ids=["drain", "follow"])
+def test_validate_stream_follow_keeps_tiered_c2(monkeypatch, follow):
+    from jobs.validate_stream import main
+
+    seen = {}
+
+    def fake_get_spark(*args, **kwargs):
+        seen.update(kwargs)
+        raise RuntimeError("no session")
+
+    monkeypatch.setattr(shacl_spark.session, "get_spark", fake_get_spark)
+    args = ["--stream", "s", "--shapes", "x.csv", "--target", "t", "--report", "r"]
+    with pytest.raises(RuntimeError, match="no session"):
+        main(args + (["--follow"] if follow else []))
+    jvm = (seen.get("extra_conf") or {}).get("spark.driver.defaultJavaOptions")
+    assert jvm == ("-XX:TieredStopAtLevel=4" if follow else None)
