@@ -13,6 +13,5 @@ from shacl_spark.functions.terms import (  # noqa: F401
     symbol_iri,
     triple_id,
     triples_from_rows,
-    value_key,
 )
 from shacl_spark.functions.vectors import cosine_similarity, dot, l2_norm  # noqa: F401

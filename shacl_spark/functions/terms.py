@@ -107,20 +107,6 @@ def triple_id(df_or_prefix: str = "") -> Column:
     return F.sha2(F.concat(*parts), 256)
 
 
-def value_key() -> Column:
-    """SHACL term-equality key for the object term (SPEC §4.8.3 sh:in,
-    sh:hasValue): literals are equal iff lexical form + datatype + lang
-    all match; IRIs by string form.  Centralized so every component
-    agrees (SURVEY.md §7 stage-3 hard parts)."""
-    return F.concat_ws(
-        "\x01",
-        F.col("obj_kind"),
-        F.col("obj"),
-        F.coalesce(F.col("obj_dt"), F.lit("")),
-        F.coalesce(F.col("obj_lang"), F.lit("")),
-    )
-
-
 # --- unique node keys (focus/value-node identity) ----------------------------
 #
 # Node frames key each term by ONE string that is globally unique per
@@ -128,7 +114,7 @@ def value_key() -> Column:
 # triples `subj` column stay plain string joins), while literals and
 # blank nodes are prefix-encoded with kind/dt/lang.  This makes every
 # string-keyed join in the engine (conformance memos, cardinality
-# count joins, hasValue anti-joins) exact on FULL term identity — an
+# count joins, equals/disjoint/hasValue/in) exact on FULL term identity — an
 # IRI `http://ex/foo` and a literal "http://ex/foo" can no longer
 # conflate (SPEC §4.6/§4.7 conformance; ADVICE r01 medium).
 

@@ -123,9 +123,13 @@ def run_with_checkpoints(
             f.write("\n".join(rows) + "\n")
 
     # the known schema skips the footer-inference job, and the explicit
-    # projection keeps the group directory out of the columns
+    # projection keeps the group directory out of the columns.  The group
+    # directories are listed here, not passed as a glob: Spark's
+    # metadata-log probe stats a glob path literally and logs a
+    # FileNotFoundException for it
+    groups = sorted(glob.glob(os.path.join(data_dir, "group=*")))
     return (
         triples.sparkSession.read.schema(triples.schema)
-        .parquet(os.path.join(data_dir, "group=*"))
+        .parquet(*groups)
         .select(*triples.columns)
     )

@@ -13,7 +13,8 @@ Scale notes:
 - identical path joins across constraints of one shape produce
   identical shuffle exchanges, which Spark dedupes physically
   (ReusedExchange) — we additionally reuse the VN frame object;
-- class/closure joins broadcast the small ontology side
+- the class hierarchy is one driver-side map (``Validator.closure``);
+  class targets and sh:class are literal rdf:type filters
   (targets.instances_of).
 """
 
@@ -25,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from shacl_spark.functions.terms import SH, node_key_col, node_val_col
+from shacl_spark.functions.terms import SH, node_key, node_key_col, node_val_col
 from shacl_spark.shacl import components as C
 from shacl_spark.shacl.parser import parse_shapes_graph
 from shacl_spark.shacl.paths import (
@@ -35,7 +36,7 @@ from shacl_spark.shacl.paths import (
     identity_vn,
 )
 from shacl_spark.shacl.shapes import PredicatePath, PropertyShape, Shape, ShapesGraph
-from shacl_spark.shacl.targets import focus_nodes, subclass_closure, instances_of
+from shacl_spark.shacl.targets import focus_nodes, instances_of, subclass_closure_map
 
 REPORT_SCHEMA = T.StructType(
     [
@@ -77,25 +78,11 @@ def _path_kind(shape: Shape) -> str | None:
     return None
 
 
-def _VKEY():
-    return F.concat_ws(
-        "\x01",
-        F.col("kind"),
-        F.col("value"),
-        F.coalesce(F.col("dt"), F.lit("")),
-        F.coalesce(F.col("lang"), F.lit("")),
-    )
-
-
 def _vn_node_key():
     """Unique term key of a VN row's VALUE term — matches the `node`
     column of node frames (terms.node_key_col), so VN↔node-frame joins
     are single-string equi-joins on full term identity."""
     return node_key_col(F.col("kind"), F.col("value"), F.col("dt"), F.col("lang"))
-
-
-def _tkey(term) -> str:
-    return "\x01".join([term.kind, term.value, term.dt or "", term.lang or ""])
 
 
 class Validator:
@@ -158,7 +145,7 @@ class Validator:
         # are node-local (SPEC §2.1.1) and the conformance memo handles
         # partial coverage with delta evaluation.
         self._only_nodes = only_nodes
-        self._closure: DataFrame | None = None
+        self._closure: dict[str, set[str]] | None = None
         # per-shape conformance memo: shape_iri → checkpointed
         # DF[node, kind, dt, lang, bad], keyed on the UNIQUE term key
         # (terms.node_key_col) so terms with equal lexical form but
@@ -172,14 +159,10 @@ class Validator:
     # --- infrastructure ------------------------------------------------------
 
     @property
-    def closure(self):
-        """Driver-side direct-subs map when the ontology fits (one tiny
-        collect; the common case), else the distributed closure frame."""
+    def closure(self) -> dict[str, set[str]]:
+        """Driver-side direct-subs map (one tiny collect, on first use)."""
         if self._closure is None:
-            from shacl_spark.shacl.targets import subclass_closure_map
-
-            m = subclass_closure_map(self.t)
-            self._closure = m if m is not None else subclass_closure(self.t)
+            self._closure = subclass_closure_map(self.t)
         return self._closure
 
     def _empty(self) -> DataFrame:
@@ -473,7 +456,9 @@ class Validator:
                 shape.language_in, shape.sparql,
             ) if attr not in (None, (), False)
         )
-        if self.cache and n_constraints + len(shape.property) > 1:
+        # _child_plans hands ONE value-node frame to every child shape:
+        # persist it once, not once per child
+        if self.cache and n_constraints + len(shape.property) > 1 and not nodes.is_cached:
             nodes = nodes.persist()
             self._cached.append(nodes)
 
@@ -621,16 +606,16 @@ class Validator:
             st(dup, "UniqueLangConstraintComponent", "duplicate language tags")
 
         # --- §4.5 property pair ---------------------------------------------------
-        vnk = vn.withColumn("vkey", _VKEY())
+        vnk = vn.withColumn("vkey", _vn_node_key())
         for p in shape.equals:
-            other = _hop(nodes, self.t, p, inverse=False).withColumn("vkey", _VKEY())
+            other = _hop(nodes, self.t, p, inverse=False).withColumn("vkey", _vn_node_key())
             a_not_b = vnk.join(other.select("focus", "vkey"), ["focus", "vkey"], "left_anti")
             b_not_a = other.join(vnk.select("focus", "vkey"), ["focus", "vkey"], "left_anti")
             st(a_not_b.select("focus", "value", "kind", "dt", "lang").unionByName(b_not_a.select("focus", "value", "kind", "dt", "lang")),
                "EqualsConstraintComponent", f"values differ from values of {p}")
 
         for p in shape.disjoint:
-            other = _hop(nodes, self.t, p, inverse=False).withColumn("vkey", _VKEY())
+            other = _hop(nodes, self.t, p, inverse=False).withColumn("vkey", _vn_node_key())
             shared = vnk.join(other.select("focus", "vkey"), ["focus", "vkey"], "left_semi")
             st(shared.select("focus", "value", "kind", "dt", "lang"),
                "DisjointConstraintComponent", f"value shared with {p}")
@@ -772,7 +757,7 @@ class Validator:
 
         for term in shape.has_value:
             have = (
-                vn.where(_VKEY() == F.lit(_tkey(term)))
+                vn.where(_vn_node_key() == F.lit(node_key(term.kind, term.value, term.dt, term.lang)))
                 .select(F.col("focus").alias("node"))
                 .distinct()
             )
@@ -780,9 +765,9 @@ class Validator:
                "HasValueConstraintComponent", f"missing required value {term.value}")
 
         if shape.in_ is not None:
-            keys = [_tkey(t) for t in shape.in_]
+            keys = [node_key(t.kind, t.value, t.dt, t.lang) for t in shape.in_]
             value_checks.append((
-                "InConstraintComponent", ~_VKEY().isin(*keys), "value not in sh:in list",
+                "InConstraintComponent", ~_vn_node_key().isin(*keys), "value not in sh:in list",
             ))
 
         if value_checks:

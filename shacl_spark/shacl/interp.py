@@ -113,7 +113,7 @@ class Store:
             self._inv_idx[p] = idx
         return idx
 
-    def subclass_closure(self) -> dict[str, set[str]]:
+    def superclasses(self) -> dict[str, set[str]]:
         """cls → all (reflexive-transitive) superclasses."""
         up: dict[str, set[str]] = defaultdict(set)
         classes: set[str] = set()
@@ -278,7 +278,7 @@ class Oracle:
         self.shapes = (
             shapes if isinstance(shapes, ShapesGraph) else parse_shapes_graph(shapes)
         )
-        self.closure = self.store.subclass_closure()
+        self.closure = self.store.superclasses()
 
     # --- paths (recursive, per node) ------------------------------------------
 

@@ -51,7 +51,7 @@ from shacl_spark.functions.terms import RDF, SH
 from shacl_spark.shacl.parser import _Graph, _parse_path, parse_shapes_graph
 from shacl_spark.shacl.paths import eval_path, identity_vn
 from shacl_spark.shacl.shapes import Path, ShapesGraph, Term
-from shacl_spark.shacl.targets import focus_nodes, subclass_closure
+from shacl_spark.shacl.targets import focus_nodes
 
 RDF_TYPE = RDF + "type"
 SH_THIS = SH + "this"
@@ -253,11 +253,10 @@ def infer(
 
     for _ in range(max_rounds):
         v = Validator(spark, cur, sg, assume_distinct=True)
-        closure = subclass_closure(cur)
         frames: list[DataFrame] = []
         for rule in rules:
             shape = sg.shapes[rule.shape_iri]
-            focus = focus_nodes(spark, shape, cur, closure)
+            focus = focus_nodes(spark, shape, cur, v.closure)
             for cond in rule.conditions:
                 if cond not in sg.shapes:
                     raise ValueError(

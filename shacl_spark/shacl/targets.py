@@ -1,9 +1,11 @@
 """Target selection → focus node frames (SPEC §2.1.3; SURVEY.md §2.C).
 
-The class hierarchy (rdfs:subClassOf closure) is computed ONCE per
-validation run with the shared fixpoint iterator and is tiny relative
-to the data, so every use is a broadcast join against the (huge)
-rdf:type triples — no shuffle on the big side.
+The class hierarchy is ONE driver-side map (super → direct subs,
+:func:`subclass_closure_map`), collected once per validation run from
+the ontology-sized rdfs:subClassOf edges.  Targets, sh:class and
+SHACL-AF rules expand it on the driver (:func:`subtypes_of`) and scan
+the rdf:type triples with a literal filter (past 256 subtypes, a
+broadcast join against a local relation) — no closure fixpoint.
 """
 
 from __future__ import annotations
@@ -19,7 +21,7 @@ from shacl_spark.functions.terms import (
     node_key_col,
     subject_kind_col,
 )
-from shacl_spark.operators.fixpoint import iterate_to_fixpoint
+from shacl_spark.session import local_frame
 from shacl_spark.shacl.shapes import Shape, Term
 
 NODE_SCHEMA = T.StructType(
@@ -38,55 +40,20 @@ def empty_nodes(spark: SparkSession) -> DataFrame:
 
 def nodes_from_terms(spark: SparkSession, terms) -> DataFrame:
     rows = [(node_key(t.kind, t.value, t.dt, t.lang), t.kind, t.dt, t.lang) for t in terms]
-    return spark.createDataFrame(rows, NODE_SCHEMA)
-
-
-def subclass_closure(triples: DataFrame) -> DataFrame:
-    """Reflexive-transitive rdfs:subClassOf closure → DF[sub, sup].
-
-    Universe = every IRI appearing as a class (rdf:type object or
-    subClassOf endpoint).  The hierarchy is assumed driver-small (true
-    for any real ontology); the closure frame is broadcast at use sites.
-    """
-    sco = triples.where(F.col("pred") == RDFS_SUBCLASSOF).select(
-        F.col("subj").alias("sub"), F.col("obj").alias("sup")
-    )
-    classes = (
-        triples.where(F.col("pred") == RDF_TYPE)
-        .select(F.col("obj").alias("c"))
-        .unionByName(sco.select(F.col("sub").alias("c")))
-        .unionByName(sco.select(F.col("sup").alias("c")))
-        .distinct()
-    )
-    reflexive = classes.select(F.col("c").alias("sub"), F.col("c").alias("sup"))
-
-    # no class hierarchy (the common KG case): closure = reflexive pairs,
-    # skip the fixpoint's eager checkpoint actions entirely (lazy
-    # checkpoint: computed inside the first consumer job, then cached)
-    if sco.isEmpty():
-        return reflexive.localCheckpoint(eager=False)
-
-    def step(frontier: DataFrame) -> DataFrame:
-        # extend each known (sub, sup) by one edge sup -subClassOf-> sup2
-        return frontier.alias("f").join(
-            sco.alias("e"), F.col("f.sup") == F.col("e.sub"), "inner"
-        ).select(F.col("f.sub").alias("sub"), F.col("e.sup").alias("sup"))
-
-    return iterate_to_fixpoint(reflexive, step, key_cols=["sub", "sup"])
+    return local_frame(spark, rows, NODE_SCHEMA)
 
 
 def subclass_closure_map(
     triples: DataFrame, max_schema_rows: int = 1_000_000
-) -> dict[str, set[str]] | None:
+) -> dict[str, set[str]]:
     """DRIVER-side subclass hierarchy: super → direct subs, collected
-    from the (ontology-sized) subClassOf edge list (r06 — the same
-    schema-is-small assumption entailment.py makes).  Returns None when
-    the edge list exceeds the cap; callers then fall back to the
-    distributed :func:`subclass_closure` frame.  With the map in hand,
-    target/class instance selection becomes a literal ``isin`` filter —
-    no classes-universe distinct, no closure fixpoint, no broadcast
-    join materializations (profiled r06: those were ~a dozen separate
-    AQE jobs per validation)."""
+    from the (ontology-sized) subClassOf edge list — the same
+    schema-is-small assumption entailment.py makes, with the same cap:
+    a hierarchy over ``max_schema_rows`` edges raises.  With the map in
+    hand, target/class instance selection is a literal filter — no
+    classes-universe distinct, no closure fixpoint, no join
+    materializations (profiled r06: those were ~a dozen separate AQE
+    jobs per validation)."""
     from collections import defaultdict
 
     rows = (
@@ -96,7 +63,10 @@ def subclass_closure_map(
         .collect()
     )
     if len(rows) > max_schema_rows:
-        return None
+        raise ValueError(
+            f"subclass_closure_map: schema statements exceed {max_schema_rows}; "
+            "raise max_schema_rows if the ontology really is this large"
+        )
     down: dict[str, set[str]] = defaultdict(set)
     for r in rows:
         down[r[1]].add(r[0])
@@ -119,16 +89,14 @@ def subtypes_of(down: dict[str, set[str]], classes) -> set[str]:
 def _typed_nodes(triples: DataFrame, subtypes: set[str]) -> DataFrame:
     """Distinct subjects with rdf:type in ``subtypes`` (driver list).
     Small lists inline as a literal isin; large ones broadcast-join a
-    parallelized frame (thousands of isin literals choke Catalyst
+    local relation (thousands of isin literals choke Catalyst
     re-analysis — measured in shacl/incremental.py)."""
     typed = triples.where(F.col("pred") == RDF_TYPE)
     subs = sorted(subtypes)
     if len(subs) <= 256:
         hits = typed.where(F.col("obj").isin(subs)) if subs else typed.limit(0)
     else:
-        sdf = triples.sparkSession.createDataFrame(
-            [(s,) for s in subs], "sub string"
-        )
+        sdf = local_frame(triples.sparkSession, [(s,) for s in subs], "sub string")
         hits = typed.join(F.broadcast(sdf), F.col("obj") == F.col("sub"), "inner")
     return (
         hits.select(F.col("subj").alias("node"))
@@ -142,30 +110,19 @@ def _typed_nodes(triples: DataFrame, subtypes: set[str]) -> DataFrame:
     )
 
 
-def instances_of(triples: DataFrame, closure, class_iri: str) -> DataFrame:
+def instances_of(
+    triples: DataFrame, closure: dict[str, set[str]], class_iri: str
+) -> DataFrame:
     """SHACL instances of ``class_iri``: nodes with rdf:type T where
-    T subClassOf* class_iri.  ``closure`` is either the driver-side
-    direct-subs map (literal filter, no join) or the distributed
-    closure frame (broadcast the small slice)."""
-    if isinstance(closure, dict):
-        return _typed_nodes(triples, subtypes_of(closure, [class_iri]))
-    subtypes = closure.where(F.col("sup") == class_iri).select("sub")
-    return (
-        triples.where(F.col("pred") == RDF_TYPE)
-        .join(F.broadcast(subtypes), F.col("obj") == F.col("sub"), "inner")
-        .select(F.col("subj").alias("node"))
-        .distinct()
-        .select(
-            "node",
-            subject_kind_col(F.col("node")).alias("kind"),
-            F.lit(None).cast("string").alias("dt"),
-            F.lit(None).cast("string").alias("lang"),
-        )
-    )
+    T subClassOf* class_iri (``closure``: :func:`subclass_closure_map`)."""
+    return _typed_nodes(triples, subtypes_of(closure, [class_iri]))
 
 
 def focus_nodes(
-    spark: SparkSession, shape: Shape, triples: DataFrame, closure: DataFrame
+    spark: SparkSession,
+    shape: Shape,
+    triples: DataFrame,
+    closure: dict[str, set[str]],
 ) -> DataFrame:
     """Union of all declared targets, deduped on term identity."""
     frames: list[DataFrame] = []
@@ -178,26 +135,8 @@ def focus_nodes(
     if classes:
         # one type-scan for ALL target classes (a shape with k
         # targetClass declarations would otherwise scan the rdf:type
-        # slice k times and dedup k frames); with a driver-side closure
-        # map the subtype set inlines as a literal filter — no join
-        if isinstance(closure, dict):
-            frames.append(_typed_nodes(triples, subtypes_of(closure, classes)))
-        else:
-            subtypes = (
-                closure.where(F.col("sup").isin(classes)).select("sub").distinct()
-            )
-            frames.append(
-                triples.where(F.col("pred") == RDF_TYPE)
-                .join(F.broadcast(subtypes), F.col("obj") == F.col("sub"), "inner")
-                .select(F.col("subj").alias("node"))
-                .distinct()
-                .select(
-                    "node",
-                    subject_kind_col(F.col("node")).alias("kind"),
-                    F.lit(None).cast("string").alias("dt"),
-                    F.lit(None).cast("string").alias("lang"),
-                )
-            )
+        # slice k times and dedup k frames)
+        frames.append(_typed_nodes(triples, subtypes_of(closure, classes)))
 
     for p in shape.target_subjects_of:
         frames.append(

@@ -147,8 +147,8 @@ def test_bucketed_join_is_colocated(spark):
 def test_validation_plan_has_no_cartesian_product(spark):
     """Every constraint join is an equi-join — the OPTIMIZED logical
     plan (AQE hides the physical tree pre-execution) must contain no
-    cartesian product, and the class-closure join must carry the
-    broadcast hint."""
+    cartesian product.  The 3-level class target is a literal rdf:type
+    filter from the driver-side subclass map, not a join."""
     from fixtures.shacl_cases import CASES
     from shacl_spark.functions.terms import triples_from_rows
     from shacl_spark.shacl.engine import Validator
